@@ -135,11 +135,14 @@ def test_query_matches_pyoracle(spark, index_dir, pages):
             assert gu == eu, f"rank {i}: {gu} != {eu}"
 
 
-def test_resume_converges(spark, docs_df, index_dir, tmp_path_factory):
-    """Simulated mid-build crash: drop half the manifest commits and their
-    segment partitions → re-run → byte-identical index."""
+def test_resume_converges(spark, index_dir, tmp_path_factory):
+    """Simulated mid-build crash: drop doc_map, half the manifest commits and
+    their segment partitions → re-run → byte-identical index. The stamped
+    forward is reused: docs are not re-tokenized (a poisoned docs frame
+    would change the index) and doc_map comes back from its marker rows."""
     crashed = str(tmp_path_factory.mktemp("resume") / "idx")
     shutil.copytree(index_dir, crashed)
+    shutil.rmtree(os.path.join(crashed, "doc_map"))
     for b in range(0, N_BUCKETS, 2):
         os.remove(mf.bucket_path(crashed, b))
         part = os.path.join(crashed, "segments", f"bucket={b}")
@@ -147,7 +150,12 @@ def test_resume_converges(spark, docs_df, index_dir, tmp_path_factory):
             shutil.rmtree(part)
     assert sorted(mf.completed_buckets(crashed)) == list(range(1, N_BUCKETS, 2))
 
-    res = build_index(spark, docs_df, crashed, n_buckets=N_BUCKETS, n_salts=4)
+    poisoned = spark.createDataFrame(
+        [("http://must-not-be-read/", "zzz", "en")],
+        "url string, text string, lang string",
+    )
+    res = build_index(spark, poisoned, crashed, n_buckets=N_BUCKETS, n_salts=4)
+    assert res.n_docs == N_DOCS and "forward_s" not in res.phase_seconds
     assert sorted(res.built_buckets) == list(range(0, N_BUCKETS, 2))
     assert sorted(res.skipped_buckets) == list(range(1, N_BUCKETS, 2))
     assert sorted(mf.completed_buckets(crashed)) == list(range(N_BUCKETS))
@@ -164,6 +172,14 @@ def test_resume_converges(spark, docs_df, index_dir, tmp_path_factory):
         ).select(*cols).collect()
     )
     assert a == b
+
+    def doc_map(ix):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(ix, "doc_map")).collect()
+        )
+
+    assert doc_map(crashed) == doc_map(index_dir)
 
 
 def test_snippet_lookup_j2(spark, docs_df, index_dir):
@@ -664,11 +680,9 @@ def test_term_id_collision_fallback_matches_hot_path(
     assert seg_rows(d) == seg_rows(index_dir)
 
 
-# ---------------------------------------------------------------- mapside
 def _decoded_segments(spark, ix):
-    """Segments as {term: (bucket, df, cf, ids, tfs, dls, max_impact_all)}.
-    Mapside and grouped builds cut runs at different places, so blobs are
-    not byte-comparable — the DECODED content must be identical."""
+    """Segments as {term: (bucket, df, cf, ids, tfs, dls, max_impact_all)}:
+    the decoded content two builds of one corpus must agree on."""
     from words_in_context_spark.index.query import _row_to_encoded
     from words_in_context_spark.operators.codec import decode_postings
 
@@ -683,120 +697,11 @@ def _decoded_segments(spark, ix):
     return out
 
 
-@pytest.fixture(scope="module")
-def mapside_index_dir(spark, docs_df, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("mapside") / "idx")
-    res = build_index(
-        spark, docs_df, d, n_buckets=N_BUCKETS, n_salts=4,
-        encode_mode="mapside",
-    )
-    assert res.n_docs == N_DOCS
-    return d
-
-
-def test_mapside_layout_marker(mapside_index_dir):
-    assert os.path.exists(
-        os.path.join(mapside_index_dir, "forward", "_MAPSIDE")
-    )
-
-
-def test_mapside_matches_grouped_decoded(
-    spark, index_dir, mapside_index_dir
-):
-    got = _decoded_segments(spark, mapside_index_dir)
-    want = _decoded_segments(spark, index_dir)
-    assert got == want
-
-
-def test_mapside_query_parity(spark, index_dir, mapside_index_dir):
-    """Distributed WAND exercises the salt-range block slicing over the
-    mapside build's run geometry; local WAND exercises block-max skipping."""
-    hm = load_index(mapside_index_dir)
-    hg = load_index(index_dir)
-    assert query_topk_local(spark, hm, QUERY, k=10) == query_topk_local(
-        spark, hg, QUERY, k=10
-    )
-    dist = [
-        (r["doc_id"], r["score"])
-        for r in query_topk(spark, hm, QUERY, k=10).orderBy("rank").collect()
-    ]
-    assert dist == query_topk_local(spark, hg, QUERY, k=10)
-
-
-def test_mapside_resume_converges(
-    spark, docs_df, mapside_index_dir, tmp_path_factory, monkeypatch
-):
-    """Crash-resume over a mapside forward must take the mapside path again
-    (layout marker) and converge to the same decoded index."""
-    from words_in_context_spark.index import build as b
-
-    calls = []
-    real = b._encode_mapside
-
-    def spy(avgdl, n_salts, fine_salts=None):
-        calls.append(True)
-        return real(avgdl, n_salts, fine_salts)
-
-    monkeypatch.setattr(b, "_encode_mapside", spy)
-    crashed = str(tmp_path_factory.mktemp("mapside_resume") / "idx")
-    shutil.copytree(mapside_index_dir, crashed)
-    for bkt in range(0, N_BUCKETS, 2):
-        os.remove(mf.bucket_path(crashed, bkt))
-        part = os.path.join(crashed, "segments", f"bucket={bkt}")
-        if os.path.isdir(part):
-            shutil.rmtree(part)
-    res = build_index(
-        spark, docs_df, crashed, n_buckets=N_BUCKETS, n_salts=4,
-        encode_mode="mapside",
-    )
-    assert sorted(res.built_buckets) == list(range(0, N_BUCKETS, 2))
-    assert calls, "resume did not take the mapside encode path"
-    assert _decoded_segments(spark, crashed) == _decoded_segments(
-        spark, mapside_index_dir
-    )
-
-
-def test_mapside_over_grouped_forward_falls_back(
-    spark, docs_df, index_dir, tmp_path_factory, monkeypatch
-):
-    """encode_mode='mapside' on a resume over a GROUPED-written forward
-    (no layout marker → partitioning unknown) must silently use the grouped
-    encode path, not trust an unverifiable layout."""
-    from words_in_context_spark.index import build as b
-
-    calls = []
-    real = b._encode_mapside
-
-    def spy(avgdl, n_salts, fine_salts=None):
-        calls.append(True)
-        return real(avgdl, n_salts, fine_salts)
-
-    monkeypatch.setattr(b, "_encode_mapside", spy)
-    crashed = str(tmp_path_factory.mktemp("grouped_fwd") / "idx")
-    shutil.copytree(index_dir, crashed)
-    os.remove(mf.bucket_path(crashed, 0))
-    shutil.rmtree(
-        os.path.join(crashed, "segments", "bucket=0"), ignore_errors=True
-    )
-    build_index(
-        spark, docs_df, crashed, n_buckets=N_BUCKETS, n_salts=4,
-        encode_mode="mapside",
-    )
-    assert not calls, "mapside ran without a layout marker"
-    assert _decoded_segments(spark, crashed) == _decoded_segments(
-        spark, index_dir
-    )
-
-
 def test_concat_run_rows_overlap_guard():
-    """The merge verifies run disjointness; an overlap raises the marker
-    _build_index_inner converts into the string-keyed rebuild."""
+    """The merge verifies run disjointness; an overlap is a hard error."""
     import pandas as pd
 
-    from words_in_context_spark.index.build import (
-        _concat_run_rows,
-        _is_run_overlap,
-    )
+    from words_in_context_spark.index.build import _concat_run_rows
 
     def run_row(salt, fd, ld):
         return dict(
@@ -809,9 +714,8 @@ def test_concat_run_rows_overlap_guard():
         pd.DataFrame([run_row(0, 6, 9), run_row(0, 1, 5), run_row(1, 10, 20)])
     )
     assert ok["df"] == 3 and ok["first_doc"] == [1, 6, 10]
-    with pytest.raises(ValueError) as ei:
+    with pytest.raises(ValueError, match="encoded runs overlap"):
         _concat_run_rows(pd.DataFrame([run_row(0, 1, 7), run_row(0, 6, 9)]))
-    assert _is_run_overlap(ei.value)
 
 
 def test_fresh_build_from_tokens_df(spark, docs_df, index_dir,
@@ -833,59 +737,20 @@ def test_fresh_build_from_tokens_df(spark, docs_df, index_dir,
     assert _decoded_segments(spark, d) == _decoded_segments(spark, index_dir)
 
 
-def test_mapside_multipartition_no_fallback(spark, docs_df, index_dir,
-                                            tmp_path_factory, monkeypatch):
-    """Mapside over a MULTI-partition corpus must complete on the hot path.
-
-    With run cuts at coarse n_salts granularity this degenerates: the docs
-    repartition hashes FINE salts across partitions, so a partition holding
-    two non-adjacent fine ranges of one coarse salt emits a run spanning a
-    gap owned by another partition — the merge overlap guard then fires and
-    the whole segments job silently rebuilds string-keyed (round-6 advice
-    #1). Cutting at the fine boundaries recorded in the _MAPSIDE marker
-    makes runs disjoint by construction: assert the fallback path never
-    runs AND the decoded index matches the grouped build."""
-    from words_in_context_spark.index import build as b
-
-    fallback_calls = []
-    real_encode_run = b._encode_run
-
-    def spy(avgdl, key="term"):
-        fallback_calls.append(key)
-        return real_encode_run(avgdl, key)
-
-    monkeypatch.setattr(b, "_encode_run", spy)
-    d = str(tmp_path_factory.mktemp("mapside_multi") / "idx")
-    res = build_index(
-        spark, docs_df.repartition(8), d, n_buckets=N_BUCKETS, n_salts=2,
-        encode_mode="mapside",
-    )
-    assert res.n_docs == N_DOCS
-    assert not fallback_calls, (
-        "mapside degenerated to the string-keyed fallback on a "
-        "multi-partition corpus"
-    )
-    import json
-
-    marker = json.load(open(os.path.join(d, "forward", "_MAPSIDE")))
-    assert marker["fine_salts"] >= 2
-    grouped = str(tmp_path_factory.mktemp("mapside_multi") / "idx_grouped")
-    build_index(spark, docs_df, grouped, n_buckets=N_BUCKETS, n_salts=2)
-    assert _decoded_segments(spark, d) == _decoded_segments(spark, grouped)
-
-
-def test_legacy_markerless_forward_resume(spark, index_dir,
+def test_legacy_markerless_forward_resume(spark, docs_df, index_dir,
                                           tmp_path_factory):
-    """Resume over a PRE-MARKER forward checkpoint (no term='' rows): the
-    has_markers probe must route to the legacy groupBy-derived doc_map and
-    the segments rebuild must converge to the same decoded index (round-6
-    verdict 'what's wrong #1' — this error/compat path never executed in
-    the suite before)."""
+    """Resume over a forward checkpoint without the current format stamp
+    (here a genuinely old one: no term='' marker rows, no doc_id column)
+    must rebuild the forward from docs, stamp it, and converge to the fresh
+    build's decoded segments, doc_map and forward rows."""
+    from words_in_context_spark.index.build import (
+        FORWARD_FORMAT_VERSION,
+        FORWARD_SCHEMA,
+    )
+
     crashed = str(tmp_path_factory.mktemp("legacy_fwd") / "idx")
     shutil.copytree(index_dir, crashed)
     fwd_path = os.path.join(crashed, "forward")
-    # rewrite the forward without marker rows (and without doc_id, like a
-    # genuinely old checkpoint), atomically enough for a test
     legacy = (
         spark.read.parquet(fwd_path)
         .where(F.col("term") != "")
@@ -898,30 +763,28 @@ def test_legacy_markerless_forward_resume(spark, index_dir,
     legacy.unpersist()
     shutil.rmtree(fwd_path)
     os.rename(tmp_fwd, fwd_path)
+    assert not os.path.exists(os.path.join(fwd_path, "_FORMAT"))
     # wipe doc_map, segments, and every bucket commit → full resume
     shutil.rmtree(os.path.join(crashed, "doc_map"))
     shutil.rmtree(os.path.join(crashed, "segments"))
     for bkt in range(N_BUCKETS):
         os.remove(mf.bucket_path(crashed, bkt))
-    # docs are NOT re-tokenized on a forward resume: pass a poisoned docs df
-    # to prove the legacy path rebuilds purely from the checkpoint
-    poisoned = spark.createDataFrame(
-        [("http://must-not-be-read/", "zzz", "en")],
-        "url string, text string, lang string",
-    )
-    res = build_index(
-        spark, poisoned, crashed, n_buckets=N_BUCKETS, n_salts=4
-    )
+    res = build_index(spark, docs_df, crashed, n_buckets=N_BUCKETS, n_salts=4)
     assert res.n_docs == N_DOCS
+    assert "forward_s" in res.phase_seconds, "forward was not rebuilt"
+    with open(os.path.join(fwd_path, "_FORMAT")) as fh:
+        assert fh.read().strip() == str(FORWARD_FORMAT_VERSION)
+
+    def rows(ix, name, schema):
+        df = spark.read.schema(schema).parquet(os.path.join(ix, name))
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(crashed, "forward", FORWARD_SCHEMA) == rows(
+        index_dir, "forward", FORWARD_SCHEMA
+    )
     assert _decoded_segments(spark, crashed) == _decoded_segments(
         spark, index_dir
     )
-    want_map = {
-        (r["url"], r["doc_id"], r["doc_len"])
-        for r in spark.read.parquet(os.path.join(index_dir, "doc_map")).collect()
-    }
-    got_map = {
-        (r["url"], r["doc_id"], r["doc_len"])
-        for r in spark.read.parquet(os.path.join(crashed, "doc_map")).collect()
-    }
-    assert got_map == want_map
+    cols = "doc_id long, url string, doc_len int"
+    assert rows(crashed, "doc_map", cols) == rows(index_dir, "doc_map", cols)
+

@@ -119,3 +119,22 @@ def test_selective_queries_on_realistic_corpus(spark, tmp_path):
     }
     top_url = doc_map[got[0][0]]
     assert rare in {t.term for t in orc.docs[top_url].tokens}
+
+
+def test_bm25_topk_on_empty_forward_table(spark, tmp_path, monkeypatch):
+    """Documents that yield no tokens give an empty forward table; the
+    battery's BM25 query must return an empty (doc_id, score, rank) frame
+    rather than crash computing avgdl from a null sum."""
+    from words_in_context_spark.driver_queries import _forward, q_bm25_topk
+
+    monkeypatch.setenv("WICS_FWD_CACHE", str(tmp_path / "fwd"))
+    sf_dir = tmp_path / "sf"
+    spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, None)], "doc_id long, text string"
+    ).write.parquet(str(sf_dir / "documents.parquet"))
+    assert _forward(spark, str(sf_dir)).count() == 0
+    out = q_bm25_topk(spark, str(sf_dir))
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,score:double,rank:int>"
+    )

@@ -147,3 +147,28 @@ def test_wand_actually_skips_blocks_on_selective_queries():
     assert got == exp
     frac = stats["blocks_decoded"] / stats["blocks_total"]
     assert frac < 0.15, f"WAND decoded {frac:.1%} of blocks - no skipping?"
+
+
+@settings(max_examples=200, deadline=None, derandomize=True, database=None)
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    neg_term=st.integers(0, 2),
+    neg_idf=st.floats(-0.3, 0.0, exclude_max=True),
+    k=st.integers(1, 19),
+)
+def test_pruning_exact_with_negative_idf(seed, neg_term, neg_idf, k):
+    """After delete_docs a term's df still counts tombstoned postings, so
+    idf(n_live_docs, df) can go negative. Pruning must stay exact: a
+    negative per-term bound would make WAND stop early or skip blocks that
+    hold better documents."""
+    from words_in_context_spark.operators.topk import hybrid_topk
+
+    rng = np.random.default_rng(seed)
+    n_docs = int(rng.integers(20, 400))
+    lists, avgdl = _make_lists(
+        rng, 3, n_docs, float(rng.uniform(0.05, 0.9)), block=8
+    )
+    lists[neg_term] = (lists[neg_term][0], neg_idf)
+    exp = brute_force_topk(lists, k, avgdl)
+    assert wand_topk(lists, k, avgdl) == exp
+    assert hybrid_topk(lists, k, avgdl) == exp

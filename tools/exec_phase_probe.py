@@ -139,13 +139,6 @@ VARIANTS: dict[str, dict] = {
             "spark.speculation.quantile": "0.5",
         },
     },
-    # byte reduction (round-6 verdict #2): encode runs map-side so the
-    # inter-JVM netty path carries COMPRESSED RUN BLOBS instead of raw
-    # posting rows — the only shuffle left in the segments phase is the
-    # cogroup with the vocabulary dim. Honest to measure only after the
-    # round-7 fine-salt fix (multi-partition corpora previously degenerated
-    # to the string-keyed fallback via the merge overlap guard).
-    "mapside": {"env": {"WICS_ENCODE_MODE": "mapside"}},
 }
 
 
@@ -155,7 +148,6 @@ def run_level(mode: str, n_docs: int, variant: dict) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_EXTRA_CONF"] = json.dumps(variant.get("conf", {}))
     env["SPARK_GRAFT_EXEC_MEM"] = variant.get("exec_mem", "4096")
-    env.update(variant.get("env", {}))
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}",
          sys.executable, "-c", _CHILD.format(repo=REPO),

@@ -8,7 +8,8 @@ Pipeline (generalizes /root/reference/extract_words.py:332-387 ``process_dir``):
     │ mapInPandas extract+tokenize+per-doc tf (narrow, NO token shuffle —
     │ the UDTF's output is already the forward index); n_docs/avgdl
     │ observed during the doc_map write (no separate stats job)
-  forward(url, doc_id, term, tf, doc_len)  → parquet checkpoint (+ doc_map)
+  forward(url, doc_id, term, tf, doc_len)  → parquet checkpoint (+ doc_map),
+    │ stamped with FORWARD_FORMAT_VERSION (an unstamped one is rebuilt)
     │ groupBy(term_id=xxhash64(term), range_salt(doc_id)) collect_list —
     │ SHUFFLE 1: fixed-width numerics only (no term strings), pre-grouped
     │ arrays into a mapInPandas encoder (one Arrow row per encode unit)
@@ -28,32 +29,6 @@ per-salt runs of one term are disjoint, ordered ranges. The merge stage
 therefore concatenates encoded runs WITHOUT decoding: block-local deltas make
 every block self-contained; only block byte-offsets are rebased. A "the"-type
 term at web scale costs S bounded encode tasks + one cheap byte-concat task.
-
-encode_mode="mapside" (opt-in, $WICS_ENCODE_MODE — MEASURED AND NOT THE
-DEFAULT: on this corpus it loses ~1.7× end-to-end; see the round-6 section
-of BENCH/BASELINE.md for the A/B and the group-count-explosion root cause.
-Kept because the tradeoff is corpus- and fabric-dependent — it removes the
-posting-grain shuffle entirely, which a real multi-node network may value
-more than loopback netty does): SHUFFLE 1 disappears.
-The DOCS are hash-partitioned on their range salt before tokenize (a
-shuffle of one row per document instead of one per posting — ~2 orders of
-magnitude fewer rows), the forward checkpoint is written doc_id-sorted
-within partitions, and the encoder runs as mapInPandas directly over the
-forward SCAN: each read split groups its rows by (term_id, salt) in numpy
-and emits finished runs. Only compressed runs ever shuffle (the cogroup
-with the vocabulary dim). Correctness rests on run-range disjointness:
-partition purity holds at the FINE salt granularity the docs repartition
-keyed on (hash partitioning scatters the fine ranges of a coarse salt
-across partitions, so purity does NOT lift to coarse n_salts — the encoder
-therefore cuts runs at the fine boundaries recorded in the _MAPSIDE marker
-and labels them with the enclosing coarse salt); fine-range-per-partition
-plus within-file doc order means any read split yields doc-contiguous,
-split-disjoint runs; the merge orders runs by (salt, first_doc) and
-verifies disjointness, falling back to the string-keyed global re-group on
-violation (e.g. a legacy unsorted checkpoint). Fine ranges nest inside
-coarse ranges, so run cuts land on coarse-salt boundaries or inside one
-salt — the block/salt alignment query_topk's range slicing needs is
-preserved.
 
 doc_id = xxhash64(url): deterministic, shuffle-free assignment. (At 10^12
 docs, expect ~3e4 birthday collisions across 2^64 — acceptable for ranking;
@@ -97,6 +72,15 @@ POSITIONS_READ_SCHEMA = (
     "bucket int, doc_id long, term string, "
     "line_ids array<int>, tok_ids array<int>"
 )
+
+# Forward checkpoint format. A build stamps forward/_FORMAT with this
+# version right after the forward write; a forward without the current
+# stamp (older layout, or a write that never finished) is treated as absent
+# and rebuilt from docs, so resume carries no compatibility branches. Bump
+# it whenever FORWARD_SCHEMA or the forward's row kinds change.
+# v1: FORWARD_SCHEMA rows plus one (term='', tf=0) marker row per document.
+FORWARD_FORMAT_VERSION = 1
+FORWARD_SCHEMA = "url string, term string, tf int, doc_len int, doc_id long"
 
 SEGMENT_SCHEMA = (
     "term string, bucket int, df long, cf long, "
@@ -232,90 +216,14 @@ def _encode_rows(avgdl: float):
     return fn
 
 
-def _next_pow2(n: int) -> int:
-    return 1 << max(int(n) - 1, 1).bit_length()
-
-
-def _encode_mapside(avgdl: float, n_salts: int, fine_salts: int | None = None):
-    """mapInPandas encoder over FORWARD-SCAN partitions — the mapside mode's
-    replacement for the posting shuffle + collect_list aggregate: each read
-    split groups its own rows by (term_id, FINE salt) with one numpy lexsort
-    and emits finished runs labeled with the COARSE salt, so the only thing
-    that ever shuffles is compressed run blobs (the cogroup with the
-    vocabulary dim).
-
-    Groups are cut at the FINE salt boundaries the docs repartition used
-    (recorded in the forward's _MAPSIDE marker), not at the coarse n_salts:
-    hash-repartitioning by fine salt puts each fine range wholly inside ONE
-    partition file, but scatters the several fine ranges of one coarse salt
-    across partitions — a split grouped at coarse granularity could emit a
-    run spanning a gap owned by another partition, tripping the merge's
-    overlap guard and silently demoting every multi-partition build to the
-    string-keyed fallback (round-6 advice #1). A fine range lives in one
-    doc-sorted file, so fine-cut runs are doc-contiguous and disjoint across
-    splits by construction; fine ranges nest inside coarse ranges (both
-    powers of two, fine >= coarse), so no run straddles a coarse-salt
-    boundary and query_topk's range slicing invariant is preserved.
-    Disjointness is still VERIFIED at merge by _concat_run_rows. Memory is
-    bounded by the parquet split size (spark.sql.files.maxPartitionBytes),
-    same order as the grouped path's per-(term, salt) aggregation buffers."""
-    if fine_salts is None or fine_salts < n_salts:
-        fine_salts = n_salts
-    boundaries = _salt_boundaries(fine_salts)
-    coarse_boundaries = _salt_boundaries(n_salts)
-
-    def fn(it):
-        frames = list(it)
-        if not frames:
-            return
-        pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-        tid = pdf["term_id"].to_numpy()
-        ids = pdf["doc_id"].to_numpy()
-        tfs = pdf["tf"].to_numpy()
-        dls = pdf["doc_len"].to_numpy()
-        fsalts = np.searchsorted(boundaries, ids, side="right").astype(
-            np.int32
-        )  # == range_salt(doc_id, fine_salts), numpy twin
-        order = np.lexsort((ids, fsalts, tid))
-        tid, ids, tfs, dls, fsalts = (
-            tid[order], ids[order], tfs[order], dls[order], fsalts[order]
-        )
-        change = (
-            np.flatnonzero(
-                (tid[1:] != tid[:-1]) | (fsalts[1:] != fsalts[:-1])
-            )
-            + 1
-        )
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [tid.size]))
-        out = []
-        for s, e in zip(starts, ends):
-            enc = _encode_unsorted(ids[s:e], tfs[s:e], dls[s:e], avgdl)
-            salt = int(
-                np.searchsorted(coarse_boundaries, ids[s], side="right")
-            )  # coarse label: the fine range nests inside this coarse range
-            out.append(
-                _enc_to_run_row("term_id", int(tid[s]), salt, enc)
-            )
-            if len(out) >= 4096:
-                yield pd.DataFrame(out, columns=_RUN_COLS_ID)
-                out = []
-        if out:
-            yield pd.DataFrame(out, columns=_RUN_COLS_ID)
-
-    return fn
-
-
 def _concat_run_rows(pdf: pd.DataFrame) -> dict:
     """Byte-concatenate a term's encoded salt runs (disjoint, ordered doc-id
     ranges — see module docstring) without decoding; block offsets rebased.
 
-    Runs order by (salt, first doc): the grouped path emits one run per
-    salt (first_doc is a no-op tie-break), the mapside path can emit
-    several doc-contiguous runs inside one salt (one per read split).
-    Disjointness is VERIFIED, not assumed — an overlap (legacy unsorted
-    forward, colliding doc_ids straddling a split) raises a marker error
-    the driver converts into the always-correct string-keyed rebuild."""
+    Runs order by (salt, first doc); both encoders emit one run per salt.
+    Disjointness is VERIFIED, not assumed: overlapping runs would decode
+    to a list with repeated or unordered doc_ids, so an overlap is a hard
+    error rather than a written segment."""
     pdf = pdf.assign(
         _fd=pdf["first_doc"].map(lambda a: int(a[0]))
     ).sort_values(["salt", "_fd"])
@@ -391,12 +299,6 @@ def _is_term_id_collision(exc: BaseException) -> bool:
     string is pinned by tests/test_index_build.py so a Spark upgrade that
     truncates error text is caught as a test failure, not silent dead code."""
     return "term_id collision" in str(exc)
-
-
-def _is_run_overlap(exc: BaseException) -> bool:
-    """True iff a failed merge carries ``_concat_run_rows``'s run-overlap
-    marker (same JVM-boundary substring matching as the collision marker)."""
-    return "encoded runs overlap" in str(exc)
 
 
 def _merge_runs_dim():
@@ -525,26 +427,20 @@ def build_index(
     with_positions: bool = False,
     lemmatizer=None,
     avgdl_override: float | None = None,
-    encode_mode: str | None = None,
 ) -> BuildResult:
     """Build (or resume) the inverted index for ``docs`` at ``index_dir``.
 
     Resume semantics: buckets already committed in the manifest are not
     rebuilt (left-anti against the manifest, ST1); doc stats are rebuilt only
     when absent. Kill-and-rerun converges to the identical index
-    (tested in tests/test_index_build.py).
+    (tested in tests/test_index_build.py). The forward checkpoint is reused
+    only when it carries the current ``FORWARD_FORMAT_VERSION`` stamp; any
+    other forward is rebuilt from ``docs``.
 
     ``with_positions=True`` additionally writes the positional store —
     (doc_id, term, line_ids sorted-with-duplicates) — the exact analog of the
     reference's ``wsid`` posting lists (extract_words.py:195-196,222-228),
     bucketed like the segments for pruned occurrence lookups.
-
-    ``encode_mode`` (default $WICS_ENCODE_MODE or "grouped"): "grouped" is
-    the collect_list-shuffle encode path; "mapside" encodes runs inside the
-    forward scan and shuffles only compressed blobs (module docstring).
-    Mapside engages on fresh tokenize builds and on resumes over a
-    mapside-written forward (the checkpoint carries a layout marker);
-    anywhere its preconditions don't hold it silently uses grouped.
     """
     if overwrite:
         mf.clear(index_dir)
@@ -580,40 +476,16 @@ def build_index(
     # pure forward resume must not touch (or even plan over) the docs
     # input.
     par = spark.sparkContext.defaultParallelism
-    fresh_forward = not _exists(os.path.join(index_dir, "forward"))
+    fresh_forward = not _forward_current(os.path.join(index_dir, "forward"))
     will_tokenize = fresh_forward or (
         with_positions and not _exists(mf.data_dir(index_dir, "positions"))
     )
-    encode_mode = encode_mode or os.environ.get(
-        "WICS_ENCODE_MODE", "grouped"
-    )
-    mapside_fine_salts: int | None = None
-    if encode_mode == "mapside" and fresh_forward and tokens is None:
-        # mapside precondition: forward partitions must be PURE at the
-        # granularity the encoder groups at. Key the docs shuffle on a FINER
-        # nested power-of-two salt so ~4 ranges land per partition (balance
-        # without a sampling pass — doc_id is a uniform hash). NOTE: purity
-        # holds only at this FINE granularity — hash repartitioning scatters
-        # the fine ranges of one coarse salt across partitions, so the
-        # encoder must also CUT its runs at these fine boundaries (the count
-        # is recorded in the _MAPSIDE marker; round-6 advice #1). Coarse
-        # n_salts stays the run LABEL/merge-order key. This replaces the
-        # parallelism repartition below: one row per DOCUMENT shuffles,
-        # never one per posting.
-        p_out = max(2 * par, docs.rdd.getNumPartitions())
-        mapside_fine_salts = max(_next_pow2(4 * p_out), n_salts)
-        docs = docs.repartition(
-            p_out,
-            range_salt(F.xxhash64(F.col("url")), mapside_fine_salts),
-        )
-    elif will_tokenize and docs.rdd.getNumPartitions() < par:
+    if will_tokenize and docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(2 * par)
     try:
         return _build_index_inner(
             spark, docs, index_dir, n_buckets, n_salts,
             tokens, with_positions, lemmatizer, avgdl_override,
-            encode_mode=encode_mode,
-            mapside_fine_salts=mapside_fine_salts,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
@@ -632,8 +504,6 @@ def _build_index_inner(
     with_positions: bool,
     lemmatizer,
     avgdl_override: float | None = None,
-    encode_mode: str = "grouped",
-    mapside_fine_salts: int | None = None,
 ) -> BuildResult:
 
     tok_name = "wics-v1" if lemmatizer is None else (
@@ -658,7 +528,7 @@ def _build_index_inner(
 
     n_docs = avgdl = None
     phases: dict = {}
-    fresh_forward = not _exists(forward_path)
+    fresh_forward = not _forward_current(forward_path)
     if fresh_forward:
         if tokens is None:
             # doc_markers: one (term='', tf=0) row per document lets this
@@ -668,7 +538,7 @@ def _build_index_inner(
             # orchestration floor, paid at every parallelism level
             fwd = tokenize_tf(docs, lemmatizer=lemmatizer, doc_markers=True)
         else:
-            # int casts: the fresh-forward re-read below uses an explicit
+            # int casts: the forward re-read below uses an explicit
             # 'tf int, doc_len int' schema (matching tokenize_tf's Arrow
             # output); count(*)/window-sum are INT64 and parquet's vectorized
             # reader refuses INT64→int32, so a fresh tokens= build would
@@ -695,12 +565,6 @@ def _build_index_inner(
         # string column entirely (8 fixed bytes on disk buy a string-free
         # hot-path scan; computed JVM-side during this write pass)
         fwd = fwd.withColumn("doc_id", F.xxhash64(F.col("url")))
-        if encode_mode == "mapside" and tokens is None:
-            # mapside layout: docs arrived salt-partitioned (build_index);
-            # a within-partition doc_id sort (no shuffle) makes any future
-            # parquet READ SPLIT of these files doc-contiguous, so mapside
-            # runs stay disjoint even when a file splits across tasks
-            fwd = fwd.sortWithinPartitions("doc_id")
         # N and avgdl observed DURING the forward write — from here the
         # segments job has everything it needs, so doc_map drops off the
         # build's critical path entirely (written concurrently below)
@@ -717,83 +581,43 @@ def _build_index_inner(
         t_fwd = time.time()
         fwd.write.mode("overwrite").parquet(forward_path)
         phases["forward_s"] = round(time.time() - t_fwd, 2)
-        if encode_mode == "mapside" and tokens is None:
-            # layout marker: a resume may only take the mapside encode path
-            # over a forward that really is salt-partitioned + doc-sorted;
-            # fine_salts records the repartition granularity the encoder
-            # must cut runs at (partition purity holds at FINE, not coarse)
-            import json as _json
-
-            with open(os.path.join(forward_path, "_MAPSIDE"), "w") as fh:
-                fh.write(_json.dumps({
-                    "layout": "range_salt+doc_id_sorted",
-                    "fine_salts": int(mapside_fine_salts or n_salts),
-                }))
+        _stamp_forward(forward_path)
         got = obs.get
         n_docs = int(got["n_docs"])
         avgdl = float(got["len_sum"]) / max(n_docs, 1)
-    if fresh_forward:
-        # explicit schema: skips the footer schema-inference job (we just
-        # wrote these files; the schema is known)
-        forward = spark.read.schema(
-            "url string, term string, tf int, doc_len int, doc_id long"
-        ).parquet(forward_path)
-    else:
-        # resume: infer — a legacy checkpoint may lack doc_id, and an
-        # explicit schema would surface the gap as silent nulls
-        forward = spark.read.parquet(forward_path)
+    # explicit schema: skips the footer schema-inference job (the stamp
+    # guarantees the layout)
+    forward = spark.read.schema(FORWARD_SCHEMA).parquet(forward_path)
 
     # ---- doc stats + doc_map (A4/A7): built once, reused on resume ---------
     doc_map_thread = None
     doc_map_errs: list[BaseException] = []
     if not _exists(doc_map_path):
-        has_markers = fresh_forward or bool(
-            forward.where(F.col("term") == "").limit(1).count()
+        # doc_map IS the marker rows: a narrow pushdown scan-and-write, no
+        # shuffle. Overlapped with the segments job in a thread (Spark
+        # schedules concurrent jobs from separate driver threads); joined
+        # before positions/stats — resume recomputes whichever of
+        # doc_map/segments a crash left missing, so the commit order between
+        # them is free.
+        doc_map_src = forward.where(F.col("term") == "").select(
+            "doc_id", "url", "doc_len"
         )
-        if has_markers:
-            # doc_map IS the marker rows: a narrow pushdown scan-and-write,
-            # no shuffle. Overlapped with the segments job in a thread
-            # (Spark schedules concurrent jobs from separate driver
-            # threads); joined before positions/stats — resume recomputes
-            # whichever of doc_map/segments a crash left missing, so the
-            # commit order between them is free.
-            doc_map_src = forward.where(F.col("term") == "").select(
-                "doc_id", "url", "doc_len"
-            )
-            if n_docs is None:
-                # resume over a marker-bearing forward: stats from markers
-                n_docs, avgdl = doc_map_src.agg(
-                    F.count("*"), F.avg("doc_len")
-                ).collect()[0]
+        if n_docs is None:
+            # resume over a current forward: stats from its marker rows
+            n_docs, avgdl = doc_map_src.agg(
+                F.count("*"), F.avg("doc_len")
+            ).collect()[0]
 
-            def _write_doc_map() -> None:
-                try:
-                    doc_map_src.write.mode("overwrite").parquet(doc_map_path)
-                except BaseException as e:  # noqa: BLE001 — re-raised on join
-                    doc_map_errs.append(e)
+        def _write_doc_map() -> None:
+            try:
+                doc_map_src.write.mode("overwrite").parquet(doc_map_path)
+            except BaseException as e:  # noqa: BLE001 — re-raised on join
+                doc_map_errs.append(e)
 
-            doc_map_thread = threading.Thread(
-                target=_write_doc_map, name="wics-doc-map-write", daemon=True
-            )
-            doc_map_thread.start()
-        else:
-            # legacy forward checkpoint (pre-marker build being resumed):
-            # derive doc_map the original way, stats observed during write
-            obs = Observation()
-            doc_map = (
-                forward.groupBy("url")
-                .agg(F.max("doc_len").alias("doc_len"))
-                .withColumn("doc_id", F.xxhash64(F.col("url")))
-                .select("doc_id", "url", "doc_len")
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.avg("doc_len").alias("avgdl"),
-                )
-            )
-            doc_map.write.mode("overwrite").parquet(doc_map_path)
-            got = obs.get
-            n_docs, avgdl = got["n_docs"], got["avgdl"]
+        doc_map_thread = threading.Thread(
+            target=_write_doc_map, name="wics-doc-map-write", daemon=True
+        )
+        doc_map_thread.start()
     if n_docs is None:
         n_docs, avgdl = spark.read.parquet(doc_map_path).agg(
             F.count("*"), F.avg("doc_len")
@@ -815,16 +639,11 @@ def _build_index_inner(
         # forward table on url for values derivable in place (measured: the
         # encode+merge stage ladder at 2→8 cores improves, and a full
         # shuffle of the fact table disappears from the plan).
-        # Newer forward checkpoints persist doc_id so this scan doesn't even
-        # read the url strings; older ones recompute it in place.
-        base = (
-            forward
-            if "doc_id" in forward.columns
-            else forward.withColumn("doc_id", F.xxhash64(F.col("url")))
-        ).where(
+        # The forward persists doc_id, so this scan doesn't even read the
+        # url strings.
+        base = forward.where(
             # doc-marker rows (term='') are doc_map/stats content, not
-            # postings; the predicate pushes to the parquet scan and no-ops
-            # on marker-free legacy checkpoints
+            # postings; the predicate pushes to the parquet scan
             F.col("term") != ""
         ).withColumn("bucket", bucket_expr(F.col("term"), n_buckets)).where(
             F.col("bucket").isin(todo)  # resume: only missing buckets
@@ -842,54 +661,21 @@ def _build_index_inner(
                 .parquet(os.path.join(index_dir, "segments"))
             )
 
-        def _vocab_dim() -> DataFrame:
-            # vocabulary dim (term, bucket, term_id — one row per distinct
+        def _encode_merge_by_term_id() -> DataFrame:
+            # HOT PATH: every shuffled/Arrow column fixed-width —
+            # encode shuffle carries (term_id, doc_id, tf, doc_len, salt)
+            # only; bucket and the term string are NOT shuffled per posting
+            # (the vocabulary dim re-attaches them at merge).
+            # Vocabulary dim (term, bucket, term_id — one row per distinct
             # in-scope term): computed INSIDE the segments job so its scan
             # pipelines with the encode map; rides the merge cogroup's
-            # existing shuffle (no per-posting term strings anywhere)
-            return (
+            # existing shuffle (no per-posting term strings anywhere).
+            dim = (
                 base.select("term")
                 .distinct()
                 .withColumn("bucket", bucket_expr(F.col("term"), n_buckets))
                 .withColumn("term_id", _term_id_expr(F.col("term")))
             )
-
-        def _encode_merge_mapside() -> DataFrame:
-            # mapside: runs come straight out of the forward scan (module
-            # docstring) — no posting-grain shuffle exists in this plan at
-            # all; the groupBy below shuffles compressed run blobs only.
-            # Run-cut granularity comes from the forward's _MAPSIDE marker
-            # (the fine salt count its repartition used); a legacy marker
-            # without the key falls back to coarse cuts, where the merge's
-            # overlap guard still protects correctness.
-            import json as _json
-
-            try:
-                with open(os.path.join(forward_path, "_MAPSIDE")) as fh:
-                    fine = int(
-                        _json.load(fh).get("fine_salts", n_salts)
-                    )
-            except (OSError, ValueError):
-                fine = n_salts
-            src = base.select(
-                _term_id_expr(F.col("term")).alias("term_id"),
-                "doc_id", "tf", "doc_len",
-            )
-            runs = src.mapInPandas(
-                _encode_mapside(avgdl, n_salts, fine), schema=_RUN_SCHEMA_ID
-            )
-            return (
-                runs.groupBy("term_id")
-                .cogroup(_vocab_dim().groupBy("term_id"))
-                .applyInPandas(_merge_runs_dim(), schema=SEGMENT_SCHEMA)
-            )
-
-        def _encode_merge_by_term_id() -> DataFrame:
-            # HOT PATH (grouped): every shuffled/Arrow column fixed-width —
-            # encode shuffle carries (term_id, doc_id, tf, doc_len, salt)
-            # only; bucket and the term string are NOT shuffled per posting
-            # (the vocabulary dim re-attaches them at merge).
-            dim = _vocab_dim()
             postings_in = base.select(
                 _term_id_expr(F.col("term")).alias("term_id"),
                 "doc_id", "tf", "doc_len",
@@ -940,38 +726,12 @@ def _build_index_inner(
                 _merge_runs(n_buckets), schema=SEGMENT_SCHEMA
             )
 
-        use_mapside = encode_mode == "mapside" and os.path.exists(
-            os.path.join(forward_path, "_MAPSIDE")
-        )
         t_seg = time.time()
         try:
             try:
-                if use_mapside:
-                    # bigger Arrow batches for the scan→encoder hand-off:
-                    # the encoder concatenates its split's batches anyway,
-                    # and the 512 default (tuned for tokenize) would hand it
-                    # thousands of tiny frames. Restored below.
-                    prev_arrow = spark.conf.get(
-                        "spark.sql.execution.arrow.maxRecordsPerBatch"
-                    )
-                    spark.conf.set(
-                        "spark.sql.execution.arrow.maxRecordsPerBatch",
-                        "65536",
-                    )
-                    try:
-                        _write_segments(_encode_merge_mapside())
-                    finally:
-                        spark.conf.set(
-                            "spark.sql.execution.arrow.maxRecordsPerBatch",
-                            prev_arrow,
-                        )
-                else:
-                    _write_segments(_encode_merge_by_term_id())
+                _write_segments(_encode_merge_by_term_id())
             except Exception as e:  # noqa: BLE001 — marker-matched else raise
-                if not (
-                    _is_term_id_collision(e)
-                    or (use_mapside and _is_run_overlap(e))
-                ):
+                if not _is_term_id_collision(e):
                     raise
                 _write_segments(_encode_merge_by_term())
         except BaseException:
@@ -1057,6 +817,20 @@ def _build_index_inner(
 
 def _exists(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def _forward_current(forward_path: str) -> bool:
+    """True iff the forward checkpoint carries the current format stamp."""
+    try:
+        with open(os.path.join(forward_path, "_FORMAT")) as fh:
+            return fh.read().strip() == str(FORWARD_FORMAT_VERSION)
+    except OSError:
+        return False
+
+
+def _stamp_forward(forward_path: str) -> None:
+    with open(os.path.join(forward_path, "_FORMAT"), "w") as fh:
+        fh.write(f"{FORWARD_FORMAT_VERSION}\n")
 
 
 def _touch_success(path: str) -> None:

@@ -32,13 +32,20 @@ INF = (1 << 63) - 1
 class PostingCursor:
     """Sequential cursor over one term's encoded postings with block seek."""
 
-    __slots__ = ("enc", "idf", "term_idx", "bi", "pos", "ids", "tfs", "dls",
-                 "n_blocks", "avgdl", "k1", "b", "global_ub", "blocks_decoded")
+    __slots__ = ("enc", "idf", "ub_idf", "term_idx", "bi", "pos", "ids",
+                 "tfs", "dls", "n_blocks", "avgdl", "k1", "b", "global_ub",
+                 "blocks_decoded")
 
     def __init__(self, enc: EncodedPostings, idf: float, term_idx: int,
                  avgdl: float, k1: float, b: float):
         self.enc = enc
         self.idf = float(idf)
+        # idf for upper bounds, clamped at 0: after delete_docs, df still
+        # counts tombstoned postings, so idf(n_live_docs, df) can go
+        # negative, and a negative bound would let pruning skip documents
+        # that beat the threshold. Impacts are >= 0, so 0 still bounds
+        # every contribution from above; scores use the real idf.
+        self.ub_idf = max(self.idf, 0.0)
         self.term_idx = term_idx
         self.avgdl = avgdl
         self.k1 = k1
@@ -47,7 +54,9 @@ class PostingCursor:
         self.bi = -1
         self.ids = self.tfs = self.dls = None
         self.pos = 0
-        self.global_ub = self.idf * float(enc.max_impact.max()) if self.n_blocks else 0.0
+        self.global_ub = (
+            self.ub_idf * float(enc.max_impact.max()) if self.n_blocks else 0.0
+        )
         self.blocks_decoded = 0
         self._load_block(0)
 
@@ -99,7 +108,7 @@ class PostingCursor:
         nbi = int(np.searchsorted(self.enc.last_doc, target, side="left"))
         if nbi >= self.n_blocks:
             return 0.0
-        return self.idf * float(self.enc.max_impact[nbi])
+        return self.ub_idf * float(self.enc.max_impact[nbi])
 
     def block_last_at(self, target: int) -> int:
         nbi = int(np.searchsorted(self.enc.last_doc, target, side="left"))
@@ -333,8 +342,9 @@ def hybrid_topk(
         return wand_topk(lists, k, avgdl, k1, b, excluded=excluded)
     if len(lists) > 1:
         dfs = sorted(enc.df for enc, _ in lists)
-        ubs = [
-            idf * float(enc.max_impact.max()) if enc.first_doc.size else 0.0
+        ubs = [  # idf clamped at 0 as in PostingCursor.ub_idf
+            max(idf, 0.0) * float(enc.max_impact.max())
+            if enc.first_doc.size else 0.0
             for enc, idf in lists
         ]
         selective_ub = max(
