@@ -8,7 +8,8 @@ Usage:
 
 Prints one JSON line per query: {"query": ..., "secs": [..], "min": ..,
 "median": ..} plus a forward-build line, and (with --plans-out) writes
-<query>.txt explain dumps.
+<query>.txt explain dumps. The forward table is built before the first
+query either way; ``--skip-forward-timing`` only drops its line.
 """
 
 from __future__ import annotations
@@ -64,10 +65,11 @@ def main() -> None:
     atexit.register(shutil.rmtree, fwd_dir, ignore_errors=True)
 
     spark.read.parquet(f"{args.sf_dir}/documents.parquet").count()
+    # materialized even with --skip-forward-timing (just not reported), so
+    # the first timed query rep never pays for the forward build
+    t0 = time.time()
+    _forward(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
     if not args.skip_forward_timing:
-        t0 = time.time()
-        _forward(spark, args.sf_dir).write.mode("overwrite").format(
-            "noop").save()
         print(json.dumps(
             {"query": "_forward_build", "secs": [round(time.time() - t0, 3)]}
         ), flush=True)

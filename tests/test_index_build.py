@@ -788,3 +788,138 @@ def test_legacy_markerless_forward_resume(spark, docs_df, index_dir,
     cols = "doc_id long, url string, doc_len int"
     assert rows(crashed, "doc_map", cols) == rows(index_dir, "doc_map", cols)
 
+
+
+# ---- split-aware tokenize widening -------------------------------------------
+
+_PAGES_COLS = "url string, html binary, text string, lang string"
+
+
+def _page_rows(n, seed):
+    """(url, html, text, lang) rows; every 7th page is html-only."""
+    return [
+        (p["url"], p["html"], None if i % 7 == 3 else p["text"], p["lang"])
+        for i, p in enumerate(generate_pages(n, seed=seed))
+    ]
+
+
+def _write_pages(rows, path, n_files=1, row_group_size=None):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    cols = list(zip(*rows))
+    tbl = pa.table({
+        "url": pa.array(cols[0], pa.string()),
+        "html": pa.array(cols[1], pa.binary()),
+        "text": pa.array(cols[2], pa.string()),
+        "lang": pa.array(cols[3], pa.string()),
+    })
+    step = -(-tbl.num_rows // n_files)
+    for k in range(n_files):
+        pq.write_table(tbl.slice(k * step, step),
+                       os.path.join(path, f"part-{k}.parquet"),
+                       row_group_size=row_group_size)
+
+
+class _SmallSplits:
+    """Session conf that cuts even a small parquet file into about
+    ``2 * defaultParallelism`` read splits, so split count and row-bearing
+    split count can differ."""
+
+    def __init__(self, spark, path):
+        par = spark.sparkContext.defaultParallelism
+        size = sum(os.path.getsize(os.path.join(path, f))
+                   for f in os.listdir(path))
+        self.spark = spark
+        self.conf = {
+            "spark.sql.files.maxPartitionBytes": str(max(size // (2 * par), 1)),
+            "spark.sql.files.openCostInBytes": "1",
+        }
+
+    def __enter__(self):
+        self.prev = {k: self.spark.conf.get(k) for k in self.conf}
+        for k, v in self.conf.items():
+            self.spark.conf.set(k, v)
+
+    def __exit__(self, *exc):
+        for k, v in self.prev.items():
+            self.spark.conf.set(k, v)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_single_row_group_corpus_widens_to_every_core(spark, tmp_path):
+    """One file with one row group is read as many splits but only one of
+    them holds rows: the build must still tokenize on every core (forward
+    written by >= defaultParallelism row-carrying tasks) and produce the
+    same forward rows, decoded segments and doc_map as a build over the
+    same rows from createDataFrame."""
+    import pyarrow.parquet as pq
+
+    from words_in_context_spark.index.build import FORWARD_SCHEMA
+
+    par = spark.sparkContext.defaultParallelism
+    rows = _page_rows(60, seed=4711)
+    src = str(tmp_path / "pages")
+    _write_pages(rows, src)
+    ix = str(tmp_path / "idx")
+    with _SmallSplits(spark, src):
+        docs = spark.read.parquet(src)
+        parts = docs.rdd.glom().map(len).collect()
+        assert len(parts) >= par and sum(1 for n in parts if n) == 1
+        res = build_index(spark, docs, ix, n_buckets=N_BUCKETS, n_salts=4)
+    assert res.n_docs == len(rows)
+    fwd_dir = os.path.join(ix, "forward")
+    writers = [
+        f for f in os.listdir(fwd_dir)
+        if f.endswith(".parquet")
+        and pq.read_metadata(os.path.join(fwd_dir, f)).num_rows > 0
+    ]
+    assert len(writers) >= par
+
+    ref = str(tmp_path / "ref")
+    build_index(spark, spark.createDataFrame(rows, _PAGES_COLS), ref,
+                n_buckets=N_BUCKETS, n_salts=4)
+
+    def rows_of(d, name, schema):
+        df = spark.read.schema(schema).parquet(os.path.join(d, name))
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows_of(ix, "forward", FORWARD_SCHEMA) == rows_of(
+        ref, "forward", FORWARD_SCHEMA
+    )
+    assert _decoded_segments(spark, ix) == _decoded_segments(spark, ref)
+    cols = "doc_id long, url string, doc_len int"
+    assert rows_of(ix, "doc_map", cols) == rows_of(ref, "doc_map", cols)
+
+
+def test_row_bearing_splits_gain_no_exchange(spark, tmp_path):
+    """Inputs whose splits already hold rows on every core (a file with
+    many row groups, or defaultParallelism files) are tokenized where they
+    are read: no RoundRobinPartitioning. The single-row-group file gets
+    exactly one, over the pruned columns."""
+    from words_in_context_spark.index.build import _widened
+    from words_in_context_spark.operators.extract import tokenize_tf
+
+    par = spark.sparkContext.defaultParallelism
+    rows = _page_rows(4 * par, seed=4712)
+    many_groups = str(tmp_path / "groups")
+    _write_pages(rows, many_groups, row_group_size=2)
+    many_files = str(tmp_path / "files")
+    _write_pages(rows, many_files, n_files=par)
+    one_group = str(tmp_path / "one")
+    _write_pages(rows, one_group)
+
+    for src in (many_groups, many_files):
+        with _SmallSplits(spark, src):
+            docs = spark.read.parquet(src)
+            parts = docs.rdd.glom().map(len).collect()
+            assert sum(1 for n in parts if n) >= par
+            plan = _plan(tokenize_tf(_widened(docs, par)))
+        assert "RoundRobinPartitioning" not in plan, src
+    with _SmallSplits(spark, one_group):
+        plan = _plan(tokenize_tf(_widened(spark.read.parquet(one_group), par)))
+    assert plan.count("RoundRobinPartitioning") == 1

@@ -152,3 +152,109 @@ def test_by_language_routing_parity():
     assert terms[0] == ["war", "go", "child", "movie"]
     assert terms[1] == ["sein", "gehen", "zeitung", "kinder"]
     assert terms[2] == ["war", "went", "zeitungen"]  # unlisted → identity
+
+
+# ---- tf kernel == groupby over tokenize_batch ------------------------------
+
+
+def _tf_by_groupby(urls, texts, langs, lemmatizer=None, doc_markers=False):
+    """The forward rows' definition: a per-(doc, term) groupby over
+    tokenize_batch's token rows, in order of first appearance."""
+    import pandas as pd
+
+    out = tokenize_batch(urls, texts, langs, lemmatizer=lemmatizer)
+    if out.empty:
+        return None
+    tf = (
+        out.groupby(["doc_idx", "term"], sort=False)
+        .size()
+        .reset_index(name="tf")
+    )
+    doc_len = out.groupby("doc_idx", sort=False).size()
+    tf["doc_len"] = tf["doc_idx"].map(doc_len).astype("int32")
+    tf["url"] = tf["doc_idx"].map(lambda i: urls[i])
+    if doc_markers:
+        mk = tf.drop_duplicates("doc_idx")[["url", "doc_len"]].copy()
+        mk["term"] = ""
+        mk["tf"] = 0
+        tf = pd.concat(
+            [tf[["url", "term", "tf", "doc_len"]], mk], ignore_index=True
+        )
+    return tf[["url", "term", "tf", "doc_len"]].astype(
+        {"tf": "int32", "doc_len": "int32"}
+    )
+
+
+def _assert_tf_equal(urls, texts, langs, lemmatizer=None, doc_markers=False):
+    import pandas as pd
+
+    from words_in_context_spark.lemma import get_lemmatizer
+    from words_in_context_spark.textparse_vec import tf_batch
+
+    lem = get_lemmatizer(lemmatizer)
+    got = tf_batch(urls, texts, langs, lemmatizer=lem, doc_markers=doc_markers)
+    want = _tf_by_groupby(urls, texts, langs, lem, doc_markers)
+    if want is None:
+        assert got is None
+    else:
+        pd.testing.assert_frame_equal(got, want)
+
+
+_LEMMATIZERS = [None, "english", {"en": "english", "de": "german"}]
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.lists(_line, min_size=0, max_size=6),
+            st.sampled_from(["en", "de", "es", "ja", "zh"]),
+        ),
+        min_size=1,
+        max_size=5,
+    ),
+    st.sampled_from(_LEMMATIZERS),
+    st.booleans(),
+)
+def test_tf_batch_equals_groupby_random_docs(docs, lemmatizer, doc_markers):
+    texts = ["\n".join(lines) for lines, _ in docs]
+    langs = [lang for _, lang in docs]
+    urls = [f"d{i}" for i in range(len(docs))]
+    _assert_tf_equal(urls, texts, langs, lemmatizer, doc_markers)
+
+
+@pytest.mark.parametrize("doc_markers", [False, True])
+@pytest.mark.parametrize("lemmatizer", _LEMMATIZERS)
+def test_tf_batch_equals_groupby_corpus(lemmatizer, doc_markers):
+    """Synthetic pages (en/de/es/fr) with every third switched to ja, so
+    the batch mixes CJK and non-CJK routing, plus empty, None and
+    token-free documents."""
+    pages = generate_pages(40, seed=4243)
+    urls = [p["url"] for p in pages] + ["e0", "e1", "e2", "e3"]
+    texts = [p["text"] for p in pages] + ["", None, "123 !!! -- ...", "- -"]
+    langs = [
+        "ja" if i % 3 == 0 else p["lang"] for i, p in enumerate(pages)
+    ] + ["en", "de", "zh", None]
+    _assert_tf_equal(urls, texts, langs, lemmatizer, doc_markers)
+
+
+@pytest.mark.parametrize("doc_markers", [False, True])
+def test_tf_batch_edge_cases(doc_markers):
+    cases = [
+        ("", "en"),
+        ("- [a] - b. C d\n-[x]y z", "en"),
+        ("des Heft'gen Sturms ew'gen Heft'gen", "de"),
+        ("des Heft'gen Sturms", "en"),
+        ("well-lit moss-grown moss 123 !!! ...", "en"),
+        ("東京タワー と 東京 の 夜", "ja"),
+        ("北京 欢迎 你 北京", "zh"),
+    ]
+    _assert_tf_equal(
+        [f"c{i}" for i in range(len(cases))],
+        [t for t, _ in cases],
+        [l for _, l in cases],
+        doc_markers=doc_markers,
+    )
+    # no document with a term at all
+    _assert_tf_equal(["a", "b"], ["", "12 -- !!"], ["en", "ja"],
+                     doc_markers=doc_markers)

@@ -5,6 +5,7 @@ commits.
 Pipeline (generalizes /root/reference/extract_words.py:332-387 ``process_dir``):
 
   docs(url, text, lang)
+    │ (round-robin widened when fewer row-bearing splits than cores)
     │ mapInPandas extract+tokenize+per-doc tf (narrow, NO token shuffle —
     │ the UDTF's output is already the forward index); n_docs/avgdl
     │ observed during the doc_map write (no separate stats job)
@@ -52,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.codec import EncodedPostings, encode_postings
-from ..operators.extract import tokenize, tokenize_tf
+from ..operators.extract import select_doc_cols, tokenize, tokenize_tf
 from . import manifest as mf
 
 # Positional-store schema generations: v1 = (bucket, doc_id, term, line_ids),
@@ -416,6 +417,52 @@ class BuildResult:
     phase_seconds: dict = field(default_factory=dict)
 
 
+# physical operators that neither move nor merge rows: a plan made only of
+# these over parquet scans yields at most one row-bearing split per row group
+_NARROW_OPS = frozenset({
+    "WholeStageCodegenExec", "ColumnarToRowExec", "InputAdapter",
+    "ProjectExec", "FilterExec", "UnionExec",
+})
+
+
+def _row_splits(docs: DataFrame) -> int:
+    """How many of ``docs``' partitions can hold rows. For a narrow plan over
+    parquet file scans that is at most the input files' total row-group
+    count (footers read driver-side, only when there are fewer files than
+    partitions); for any other input (in-memory, already shuffled) every
+    partition counts."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote, urlparse
+
+    n = docs.rdd.getNumPartitions()
+    stack = [docs._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "FileSourceScanExec":
+            if not node.nodeName().startswith("Scan parquet"):
+                return n
+        elif kind not in _NARROW_OPS:
+            return n
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    files = [urlparse(f) for f in docs.inputFiles()]
+    if len(files) >= n or any(f.scheme not in ("", "file") for f in files):
+        return n
+    return min(n, sum(
+        pq.read_metadata(unquote(f.path)).num_row_groups for f in files
+    ))
+
+
+def _widened(docs: DataFrame, par: int) -> DataFrame:
+    """``docs`` as the tokenizer should read it: unchanged when at least
+    ``par`` of its splits hold rows, else its pruned tokenizer columns
+    round-robined over ``2 * par`` partitions (one exchange)."""
+    if _row_splits(docs) >= par:
+        return docs
+    return select_doc_cols(docs).repartition(2 * par)
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -465,23 +512,25 @@ def build_index(
     )
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
     # The tokenize stage is the build's Python-heavy map: its parallelism is
-    # the INPUT partition count, and parquet's size-based split packing turns
-    # a small-file corpus into 1-4 read partitions (measured: a 10k-doc
-    # corpus tokenized on ~2 tasks of a 32-slot session — the stage ran near
-    # serial). When the scan can't feed every slot, widen it explicitly; at
-    # web scale input splits outnumber slots and this no-ops. Checked only
-    # when tokenize will actually run: a fresh forward build, OR a
-    # with_positions resume whose positions store is missing (forward
-    # present but tokenize(docs) still runs for the positional pass). A
-    # pure forward resume must not touch (or even plan over) the docs
-    # input.
+    # the number of INPUT splits that hold rows, which can be far below the
+    # partition count: parquet reads a row group in the split holding its
+    # midpoint, so one small file with one row group is read as several
+    # splits of which only one has rows (measured: a 5k-doc single-file
+    # corpus tokenized by 1 of 4 tasks). When those splits can't feed every
+    # slot (``_row_splits``), widen with one round-robin exchange over the
+    # pruned (url, text, lang[, html]) columns; at web scale row groups
+    # outnumber slots and this no-ops. Checked only when tokenize will
+    # actually run: a fresh forward build, OR a with_positions resume whose
+    # positions store is missing (forward present but tokenize(docs) still
+    # runs for the positional pass). A pure forward resume must not touch
+    # (or even plan over) the docs input.
     par = spark.sparkContext.defaultParallelism
     fresh_forward = not _forward_current(os.path.join(index_dir, "forward"))
     will_tokenize = fresh_forward or (
         with_positions and not _exists(mf.data_dir(index_dir, "positions"))
     )
-    if will_tokenize and docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(2 * par)
+    if will_tokenize:
+        docs = _widened(docs, par)
     try:
         return _build_index_inner(
             spark, docs, index_dir, n_buckets, n_salts,
@@ -519,7 +568,7 @@ def _build_index_inner(
     forward_path = os.path.join(index_dir, "forward")
 
     # The forward index (url, term, tf, doc_len) is aggregated INSIDE the
-    # extract UDTF (per-document pandas groupby) — raw token rows are never
+    # extract UDTF (textparse_vec.tf_batch) — raw token rows are never
     # shuffled, the map output IS the forward index. It is materialized to
     # parquet once: the scratch parquet doubles as a resume checkpoint and
     # as the engine's term-doc matrix artifact, and both downstream passes

@@ -10,9 +10,14 @@ lives in ``textparse`` (pure Python, unit-tested standalone), so the UDF is a
 thin Arrow adapter with no semantics of its own.
 
 Scale notes:
-  * The UDF is a narrow map — no shuffle; parallelism == input partitions.
-    At 100 TB the input table is read in splits by the parquet/Iceberg
-    source; each split tokenizes independently.
+  * The UDF is a narrow map — no shuffle; parallelism == input partitions
+    that hold rows. Parquet reads each row group in the split holding its
+    midpoint, so a split without one is an empty task: one small file with
+    one row group is read as several splits but tokenized by ONE task.
+    ``build_index`` counts those row-bearing splits and widens the input
+    when they are fewer than the session's cores. At 100 TB the input
+    table is read in splits by the parquet/Iceberg source; each split
+    tokenizes independently.
   * Column pruning matters: callers select only (url, text, lang) so the
     wide ``html`` binary column never crosses Arrow unless text is absent.
   * Output batches are capped (BATCH_OUT rows) to bound Arrow record-batch
@@ -39,6 +44,26 @@ LINES_SCHEMA = "url string, line_id int, line string"
 _BATCH_OUT = 200_000
 
 
+def _batch_inputs(pdf: pd.DataFrame) -> tuple[list, list, list]:
+    """(urls, texts, langs) of one UDF input batch. A falsy text falls back
+    to the decoded html bytes (html-only rows), a missing lang to 'en'."""
+    urls = pdf["url"].tolist()
+    texts = pdf["text"].tolist() if "text" in pdf.columns else [None] * len(pdf)
+    if "html" in pdf.columns:
+        texts = [
+            t if t else (
+                bytes(h).decode("utf-8", errors="ignore") if h is not None else ""
+            )
+            for t, h in zip(texts, pdf["html"].tolist())
+        ]
+    langs = (
+        pdf["lang"].fillna("en").tolist()
+        if "lang" in pdf.columns
+        else ["en"] * len(pdf)
+    )
+    return urls, texts, langs
+
+
 def _tokenize_batches(
     it: Iterator[pd.DataFrame], lemmatizer=None
 ) -> Iterator[pd.DataFrame]:
@@ -49,24 +74,7 @@ def _tokenize_batches(
     for pdf in it:
         if pdf.empty:
             continue
-        urls = pdf["url"].tolist()
-        if "text" in pdf.columns:
-            texts = pdf["text"].tolist()
-        else:
-            texts = [None] * len(pdf)
-        if "html" in pdf.columns:
-            htmls = pdf["html"].tolist()
-            texts = [
-                t if t else (
-                    bytes(h).decode("utf-8", errors="ignore") if h is not None else ""
-                )
-                for t, h in zip(texts, htmls)
-            ]
-        langs = (
-            pdf["lang"].fillna("en").tolist()
-            if "lang" in pdf.columns
-            else ["en"] * len(pdf)
-        )
+        urls, texts, langs = _batch_inputs(pdf)
         out = tokenize_batch(urls, texts, langs, lemmatizer=lemmatizer)
         if out.empty:
             continue
@@ -98,52 +106,60 @@ def tokenize(docs: DataFrame, lemmatizer=None) -> DataFrame:
     from ..lemma import get_lemmatizer
 
     lem = get_lemmatizer(lemmatizer)
-    return _select_doc_cols(docs).mapInPandas(
+    return select_doc_cols(docs).mapInPandas(
         lambda it: _tokenize_batches(it, lemmatizer=lem),
         schema=TOKENS_SCHEMA,
     )
 
 
-def _select_doc_cols(docs: DataFrame) -> DataFrame:
+# html column metadata: the column is NULL on every row that has text
+_HTML_MASKED = "wics.html_masked"
+
+
+def select_doc_cols(docs: DataFrame) -> DataFrame:
     """Column-prune the UDTF input WITHOUT dragging page bytes along for rows
     that already have text: when both columns exist, text-bearing rows come
     from a scan that never reads the html column at all (the wide binary's
     pages stay untouched for the common case), and only the textless-row
     branch scans html (its IsNull/equality filter is pushed to the parquet
     scan so row groups with full text columns skip it). The union re-aligns
-    schemas with NULL literals AFTER the scans."""
+    schemas with NULL literals AFTER the scans, and marks the masked html
+    column in its metadata, so pruning an already-pruned frame (e.g. one
+    widened by ``build_index``) is a plain projection."""
     base = [c for c in ("url", "text", "lang") if c in docs.columns]
     if "html" not in docs.columns:
         return docs.select(*base)
     slim = [c for c in ("url", "lang") if c in docs.columns]
     if "text" not in docs.columns:
         return docs.select(*slim, "html")
+    if docs.schema["html"].metadata.get(_HTML_MASKED):
+        return docs.select(*base, "html")
     has_text = F.col("text").isNotNull() & (F.col("text") != "")
     with_text = docs.where(has_text).select(*base)
     html_only = docs.where(~has_text).select(*slim, "html")
-    return with_text.unionByName(html_only, allowMissingColumns=True)
+    return with_text.unionByName(html_only, allowMissingColumns=True).select(
+        *base, F.col("html").alias("html", metadata={_HTML_MASKED: True})
+    )
 
 
 def _lines_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
-        out = []
-        for row in pdf.itertuples(index=False):
-            text = getattr(row, "text", None)
-            if not text and getattr(row, "html", None) is not None:
-                # same falsy-text fallback as _tokenize_batches: a doc the
-                # tokenizer indexes must also have snippet lines
-                text = bytes(row.html).decode("utf-8", errors="ignore")
-            if not text:
-                continue
-            for i, line in enumerate(extract_lines(text)):
-                out.append((row.url, i, line))
+        # same html fallback as the tokenizer: a doc it indexes must also
+        # have snippet lines
+        urls, texts, _ = _batch_inputs(pdf)
+        out = [
+            (url, i, line)
+            for url, text in zip(urls, texts)
+            if text
+            for i, line in enumerate(extract_lines(text))
+        ]
         yield pd.DataFrame(out, columns=["url", "line_id", "line"])
 
 
 def extract_lines_df(docs: DataFrame) -> DataFrame:
     """docs(url, text) → lines(url, line_id, line) — the J2 snippet side.
     line_id == SRT cue number (positional-list invariant)."""
-    return _select_doc_cols(docs).mapInPandas(_lines_batches, schema=LINES_SCHEMA)
+    return select_doc_cols(docs).mapInPandas(_lines_batches, schema=LINES_SCHEMA)
 
 
 def tokenize_simple(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -175,48 +191,16 @@ def _tf_batches(
     (n_docs, avgdl) during the forward write and derives doc_map by a
     narrow pushdown scan of the markers, deleting a whole groupBy job from
     the build's fixed orchestration floor."""
-    from ..textparse_vec import tokenize_batch
+    from ..textparse_vec import tf_batch
 
     for pdf in it:
         if pdf.empty:
             continue
-        urls = pdf["url"].tolist()
-        texts = (
-            pdf["text"].tolist() if "text" in pdf.columns else [None] * len(pdf)
+        out = tf_batch(
+            *_batch_inputs(pdf), lemmatizer=lemmatizer, doc_markers=doc_markers
         )
-        if "html" in pdf.columns:
-            texts = [
-                t if t else (
-                    bytes(h).decode("utf-8", errors="ignore") if h is not None else ""
-                )
-                for t, h in zip(texts, pdf["html"].tolist())
-            ]
-        langs = (
-            pdf["lang"].fillna("en").tolist()
-            if "lang" in pdf.columns
-            else ["en"] * len(pdf)
-        )
-        out = tokenize_batch(urls, texts, langs, lemmatizer=lemmatizer)
-        if out.empty:
-            continue
-        tf = (
-            out.groupby(["doc_idx", "term"], sort=False)
-            .size()
-            .reset_index(name="tf")
-        )
-        doc_len = out.groupby("doc_idx", sort=False).size()
-        tf["doc_len"] = tf["doc_idx"].map(doc_len).astype("int32")
-        tf["url"] = tf["doc_idx"].map(lambda i: urls[i])
-        if doc_markers:
-            mk = tf.drop_duplicates("doc_idx")[["url", "doc_len"]].copy()
-            mk["term"] = ""
-            mk["tf"] = 0
-            tf = pd.concat(
-                [tf[["url", "term", "tf", "doc_len"]], mk], ignore_index=True
-            )
-        yield tf[["url", "term", "tf", "doc_len"]].astype(
-            {"tf": "int32", "doc_len": "int32"}
-        )
+        if out is not None:
+            yield out
 
 
 def tokenize_tf(
@@ -228,7 +212,7 @@ def tokenize_tf(
     from ..lemma import get_lemmatizer
 
     lem = get_lemmatizer(lemmatizer)
-    return _select_doc_cols(docs).mapInPandas(
+    return select_doc_cols(docs).mapInPandas(
         lambda it: _tf_batches(it, lemmatizer=lem, doc_markers=doc_markers),
         schema=TF_SCHEMA,
     )
