@@ -1,8 +1,8 @@
-"""End-to-end inverted index: build → segments/manifest → WAND query → resume.
+"""End-to-end inverted index: build → segments/manifest → BM25 query → resume.
 
 Covers SURVEY §7 M2/M3: posting encode+merge with range salting, per-bucket
 manifest commits, kill-and-resume convergence, and BM25 retrieval parity
-between the distributed WAND path, the driver-local WAND path, the
+between the distributed top-k path, the driver-local top-k path, the
 decode-everything brute-force path, and the pure-Python corpus oracle."""
 
 import math

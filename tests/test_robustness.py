@@ -8,6 +8,7 @@ from words_in_context_spark.index.build import build_index
 from words_in_context_spark.index.query import (
     brute_force_query_local,
     load_index,
+    query_topk,
     query_topk_local,
 )
 
@@ -49,6 +50,18 @@ def test_build_and_query_survive_weird_docs(spark, weird_docs, tmp_path):
     assert query_topk_local(spark, h, [], k=5) == []
     assert query_topk_local(spark, h, ["nosuchterm"], k=5) == []
 
+    # k < 0 is an error on both entry points; k == 0 an empty result
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        query_topk_local(spark, h, ["fox"], k=-1)
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        query_topk(spark, h, ["fox"], k=-1)
+    assert query_topk_local(spark, h, ["fox"], k=0) == []
+    empty = query_topk(spark, h, ["fox"], k=0)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<doc_id:bigint,score:double,rank:int>"
+    )
+
 
 def test_tokenizer_degenerate_inputs():
     from words_in_context_spark.textparse import extract_and_tokenize
@@ -77,8 +90,8 @@ def test_wordscontext_on_doc_with_no_tokens(spark, weird_docs):
 
 def test_selective_queries_on_realistic_corpus(spark, tmp_path):
     """Long-tail corpus (tail_vocab): rare terms exist → queries mixing a
-    selective term with stopwords route through WAND and still match brute
-    force; tokenizer parity holds for tail docs too."""
+    selective term with stopwords match brute force and rank the rare
+    term's doc first; tokenizer parity holds for tail docs too."""
     from words_in_context_spark.corpus import generate_pages
     from words_in_context_spark.index.build import build_index
     from words_in_context_spark.index.query import (

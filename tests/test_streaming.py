@@ -264,7 +264,7 @@ def test_compaction_equals_batch(spark, tmp_path):
     """N incremental appends + compaction == one batch build: identical
     postings/positions content, the positional store compacted to one
     term-sorted file per bucket, doc_map file count bounded, old generations
-    garbage-collected, and queries (WAND + index-backed phrase) served
+    garbage-collected, and queries (BM25 top-k + index-backed phrase) served
     identically from the new generation. A post-compaction merge must append
     into the live generation."""
     import glob

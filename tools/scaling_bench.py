@@ -320,8 +320,8 @@ all-pairs median {result['efficiency_median']})
 ## Headline query suite
 
 See the driver-recorded `BENCH_r*.json` (bench.py at sf0.1, local[32]):
-per-query wall seconds, real index-build docs/sec at 10k docs, and block-max
-WAND BM25 top-k p50 latency over the built index.
+per-query wall seconds, real index-build docs/sec at 10k docs, and BM25
+top-k p50 latency over the built index.
 """
         )
 

@@ -6,8 +6,8 @@ capabilities of morehovschi/words-in-context (reference, read-only at
 /root/reference): per-document keyword ranking (TF-IDF with name filtering and
 sound-description deprioritization), contextual example lookup, incremental /
 resumable index builds — generalized to a distributed inverted index
-(docID-delta + varbyte postings, per-block max-score metadata, block-max WAND
-top-k) over Common-Crawl-style web-page tables.
+(docID-delta + varbyte postings, per-block max-score metadata, vectorized
+exact BM25 top-k) over Common-Crawl-style web-page tables.
 
 Layout
 ------

@@ -70,7 +70,7 @@ def _render_cue_text(rng: random.Random, lang: str, tail_vocab: int = 0) -> str:
         words.append(_zipf_choice(rng, _VOCAB))
     if tail_vocab and rng.random() < 0.3:
         # Zipf-ish long tail: realistic selective terms (df ≪ N) so queries
-        # with rare terms exist — the regime where WAND skipping pays.
+        # with rare terms exist (selective, high-idf query shapes).
         # Letters only: the tokenizer's alphabet normalization strips digits.
         r = rng.random()
         tid = int(tail_vocab ** r) - 1

@@ -1,18 +1,19 @@
-"""Query engine over the built index: BM25 top-k via block-max WAND.
+"""Query engine over the built index: exact BM25 top-k over compressed postings.
 
-Two execution paths sharing one kernel (operators/topk.py):
+Two execution paths sharing one kernel (operators/topk.vectorized_topk):
 
 * ``query_topk`` — distributed: segment rows for the query terms are read
   with bucket+term pushdown (partition-pruned scan), sliced per doc-id range
   along BLOCK boundaries (zero decode — the build's range-salted layout means
-  every term's blocks are already range-ordered), then each range runs WAND
-  independently inside ``applyInPandas`` and the global top-k is the merge of
-  per-range top-ks (correct because a doc's entire score lives in one range).
-  This is the 1000-executor path: ranges scale with n_salts.
+  every term's blocks are already range-ordered), then each range runs the
+  kernel independently inside ``applyInPandas`` and the global top-k is the
+  merge of per-range top-ks (correct because a doc's entire score lives in
+  one range). This is the 1000-executor path: ranges scale with n_salts.
 
 * ``query_topk_local`` — driver-side: for interactive/p50-latency use; same
-  kernel, lists fetched via the pruned scan and collected (query terms are
-  few; postings stay compressed until the kernel skips through them).
+  kernel, lists fetched via a pyarrow pruned read and cached on the handle
+  (query terms are few; postings stay compressed until the kernel decodes
+  them).
 
 idf = ln(1 + (N - df + 0.5)/(df + 0.5)); N, avgdl from stats.json.
 """
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.codec import EncodedPostings
-from ..operators.topk import brute_force_topk, hybrid_topk, wand_topk
+from ..operators.topk import brute_force_topk, vectorized_topk
 from . import manifest as mf
 from .build import POSITIONS_READ_SCHEMA, _py_bucket
 
@@ -225,21 +226,30 @@ def query_terms(text: str, lang: str = "en", lemmatizer=None) -> list[str]:
     return list(seen)
 
 
+def _check_k(k: int) -> None:
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
+
 def query_topk_local(
     spark: SparkSession, h: IndexHandle, terms: list[str], k: int = 10
 ) -> list[tuple[int, float]]:
-    """Driver-side retrieval (low-latency path): hybrid kernel — vectorized
-    exact evaluation for small candidate volumes, block-max WAND above the
-    crossover (both bit-identical, tests/test_topk.py)."""
+    """Driver-side retrieval (low-latency path): top-k (doc_id, score) by
+    score desc, doc_id asc; bit-identical to brute_force_query_local
+    (tests/test_topk.py). ``k == 0`` gives ``[]``; ``k < 0`` raises
+    ValueError."""
+    _check_k(k)
     lists = _collect_lists(spark, h, terms)
-    return hybrid_topk(lists, k, h.avgdl, excluded=h._excluded())
+    return vectorized_topk(lists, k, h.avgdl, excluded=h._excluded())
 
 
 def query_topk(
     spark: SparkSession, h: IndexHandle, terms: list[str], k: int = 10
 ) -> DataFrame:
-    """Distributed WAND: per doc-id range partial top-k, global merge.
-    Returns DataFrame (doc_id long, score double, rank int)."""
+    """Distributed retrieval: per doc-id range partial top-k, global merge.
+    Returns DataFrame (doc_id long, score double, rank int); ``k == 0``
+    gives an empty frame, ``k < 0`` raises ValueError."""
+    _check_k(k)
     n_docs, avgdl, n_salts = h.n_live_docs, h.avgdl, h.n_salts
     excluded = h._excluded()  # closure-captured; ships with the tasks
     terms_sorted = sorted(set(terms))
@@ -278,7 +288,10 @@ def query_topk(
                         {
                             "range_id": s,
                             "term": rec["term"],
-                            "df_global": rec["df"],
+                            # the slice's own posting count: the kernel's
+                            # decode reads df as the number of postings
+                            "df": sl.df,
+                            "cf": sl.cf,
                             "doc_bytes": sl.doc_bytes,
                             "tf_bytes": sl.tf_bytes,
                             "dl_bytes": sl.dl_bytes,
@@ -294,14 +307,14 @@ def query_topk(
             yield pd.DataFrame(
                 out,
                 columns=[
-                    "range_id", "term", "df_global", "doc_bytes", "tf_bytes",
+                    "range_id", "term", "df", "cf", "doc_bytes", "tf_bytes",
                     "dl_bytes", "first_doc", "last_doc", "n", "doc_off",
                     "tf_off", "dl_off", "max_impact",
                 ],
             )
 
     slice_schema = (
-        "range_id int, term string, df_global long, "
+        "range_id int, term string, df long, cf long, "
         "doc_bytes binary, tf_bytes binary, dl_bytes binary, "
         "first_doc array<long>, last_doc array<long>, n array<int>, "
         "doc_off array<long>, tf_off array<long>, dl_off array<long>, "
@@ -309,32 +322,16 @@ def query_topk(
     )
     slices = seg.mapInPandas(slice_ranges, schema=slice_schema)
 
-    def wand_range(pdf: pd.DataFrame) -> pd.DataFrame:
+    def range_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         recs = sorted(
             pdf.to_dict("records"), key=lambda r: term_order[r["term"]]
         )
-        lists = []
-        for rec in recs:
-            enc = EncodedPostings(
-                df=int(sum(rec["n"])),
-                cf=0,
-                doc_bytes=bytes(rec["doc_bytes"]),
-                tf_bytes=bytes(rec["tf_bytes"]),
-                dl_bytes=bytes(rec["dl_bytes"]),
-                first_doc=np.asarray(rec["first_doc"], dtype=np.int64),
-                last_doc=np.asarray(rec["last_doc"], dtype=np.int64),
-                n=np.asarray(rec["n"], dtype=np.int32),
-                doc_off=np.asarray(rec["doc_off"], dtype=np.int64),
-                tf_off=np.asarray(rec["tf_off"], dtype=np.int64),
-                dl_off=np.asarray(rec["dl_off"], dtype=np.int64),
-                max_impact=np.asarray(rec["max_impact"], dtype=np.float32),
-            )
-            lists.append((enc, idfs[rec["term"]]))
-        top = hybrid_topk(lists, k, avgdl, excluded=excluded)
+        lists = [(_row_to_encoded(rec), idfs[rec["term"]]) for rec in recs]
+        top = vectorized_topk(lists, k, avgdl, excluded=excluded)
         return pd.DataFrame(top, columns=["doc_id", "score"])
 
     partial = slices.groupBy("range_id").applyInPandas(
-        wand_range, schema="doc_id long, score double"
+        range_topk, schema="doc_id long, score double"
     )
     w_ordered = partial.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     from pyspark.sql import Window

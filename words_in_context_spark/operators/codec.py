@@ -3,8 +3,9 @@
 The reference keeps raw JSON posting lists (/root/reference/extract_words.py:
 384-385 — ``wsid`` word → occurrence list). At web scale postings dominate
 index size, so segments store each term's postings as two varbyte streams
-(doc-id deltas, term frequencies) plus per-block metadata enabling block-max
-WAND skipping at query time (north_star requirement).
+(doc-id deltas, term frequencies) plus per-block metadata (doc-id bounds,
+byte offsets, max impact) that lets the query path slice a list by doc-id
+range without decoding it.
 
 Pure numpy, fully vectorized — no per-posting Python. Encode/decode are exact
 inverses (property-tested in tests/test_codec.py).
@@ -199,7 +200,7 @@ def decode_postings(enc: EncodedPostings) -> tuple[np.ndarray, np.ndarray, np.nd
 
 
 def decode_block(enc: EncodedPostings, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a single block (for WAND skipping) → (doc_ids, tfs, doc_lens)."""
+    """Decode a single block → (doc_ids, tfs, doc_lens)."""
     n_blocks = enc.first_doc.size
     cnt = int(enc.n[bi])
     d_end = enc.doc_off[bi + 1] if bi + 1 < n_blocks else len(enc.doc_bytes)

@@ -18,10 +18,9 @@ Exactly-once is layered:
 
 Global-stats policy: ``avgdl`` is FROZEN at initial-build value (recorded in
 stats.json). Merged terms are re-encoded with the frozen avgdl, so block
-max-impact metadata remains an exact upper bound for query-time scores and
-WAND stays lossless; the true corpus avgdl drifts until a full rebuild —
-standard search-engine practice (global stats refresh is periodic
-maintenance, not per-batch).
+max-impact metadata remains an exact upper bound for query-time scores; the
+true corpus avgdl drifts until a full rebuild — standard search-engine
+practice (global stats refresh is periodic maintenance, not per-batch).
 """
 
 from __future__ import annotations
