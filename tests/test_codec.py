@@ -7,10 +7,10 @@ from hypothesis import strategies as st
 
 from words_in_context_spark.operators.codec import (
     bm25_impact,
+    concat_encoded,
     decode_block,
     decode_postings,
     encode_postings,
-    merge_encoded_runs,
     varbyte_decode,
     varbyte_encode,
 )
@@ -71,21 +71,51 @@ def test_postings_roundtrip(postings):
 
 
 def test_merge_runs_equals_direct_encode():
+    """The build's merge — concat_encoded over per-salt-range encodes —
+    equals encode_salt_aligned byte for byte, and decodes to the postings a
+    direct one-pass encode holds."""
+    from words_in_context_spark.index.build import (
+        _salt_boundaries,
+        encode_salt_aligned,
+    )
+
     rng = np.random.default_rng(7)
-    all_ids = np.sort(rng.choice(10**9, size=1000, replace=False))
-    tfs = rng.integers(1, 50, size=1000)
-    dls = rng.integers(10, 500, size=1000)
-    # split into 4 disjoint salted runs by doc_id hash
-    salt = all_ids % 4
+    ids = np.unique(rng.integers(-(2**63), 2**63 - 1, size=1000, dtype=np.int64))
+    tfs = rng.integers(1, 50, size=ids.size)
+    dls = rng.integers(10, 500, size=ids.size)
+    bounds = _salt_boundaries(4)
+    cuts = [0, *np.searchsorted(ids, bounds).tolist(), ids.size]
     runs = [
-        (all_ids[salt == s], tfs[salt == s], dls[salt == s]) for s in range(4)
+        encode_postings(ids[s:e], tfs[s:e], dls[s:e], avgdl=120.0)
+        for s, e in zip(cuts, cuts[1:])
+        if e > s
     ]
-    merged = merge_encoded_runs(runs, avgdl=120.0)
-    direct = encode_postings(all_ids, tfs, dls, avgdl=120.0)
-    assert merged.doc_bytes == direct.doc_bytes
-    assert merged.tf_bytes == direct.tf_bytes
-    assert merged.dl_bytes == direct.dl_bytes
-    assert np.array_equal(merged.max_impact, direct.max_impact)
+    assert len(runs) == 4
+    merged = concat_encoded(runs)
+    aligned = encode_salt_aligned(ids, tfs, dls, 120.0, bounds)
+    for f in ("df", "cf", "doc_bytes", "tf_bytes", "dl_bytes"):
+        assert getattr(merged, f) == getattr(aligned, f), f
+    for f in ("first_doc", "last_doc", "n", "doc_off", "tf_off", "dl_off",
+              "max_impact"):
+        assert np.array_equal(getattr(merged, f), getattr(aligned, f)), f
+    direct = encode_postings(ids, tfs, dls, avgdl=120.0)
+    for got, want in zip(decode_postings(merged), decode_postings(direct)):
+        assert np.array_equal(got, want)
+
+
+def test_concat_encoded_overlap_guard():
+    """Runs must cover disjoint, ordered doc-id ranges; an overlapping or
+    out-of-order run is a hard error, not a written segment."""
+    def run(*ids):
+        ids = np.asarray(ids, dtype=np.int64)
+        return encode_postings(ids, np.ones(ids.size), np.ones(ids.size), 1.0)
+
+    ok = concat_encoded([run(1, 5), run(6, 9), run(10, 20)])
+    assert ok.df == 6 and ok.first_doc.tolist() == [1, 6, 10]
+    with pytest.raises(ValueError, match="encoded runs overlap"):
+        concat_encoded([run(1, 7), run(6, 9)])
+    with pytest.raises(ValueError, match="encoded runs overlap"):
+        concat_encoded([run(6, 9), run(1, 5)])
 
 
 def test_compression_beats_raw():

@@ -297,20 +297,24 @@ def test_encode_run_aggregates_docid_collisions():
     collisions)."""
     import pandas as pd
 
-    from words_in_context_spark.index.build import _encode_run
-    from words_in_context_spark.index.query import _row_to_encoded
-    from words_in_context_spark.operators.codec import decode_postings
+    from words_in_context_spark.index.build import _encode_rows
+    from words_in_context_spark.operators.codec import (
+        _row_to_encoded,
+        decode_postings,
+    )
 
     pdf = pd.DataFrame(
         {
-            "term": ["t"] * 4,
-            "salt": [0] * 4,
-            "doc_id": np.asarray([7, 3, 7, 9], dtype=np.int64),
-            "tf": np.asarray([2, 1, 5, 4], dtype=np.int64),
-            "doc_len": np.asarray([10, 8, 30, 12], dtype=np.int64),
+            "term": ["t"],
+            "salt": [0],
+            "doc_ids": [np.asarray([7, 3, 7, 9], dtype=np.int64)],
+            "tfs": [np.asarray([2, 1, 5, 4], dtype=np.int64)],
+            "dls": [np.asarray([10, 8, 30, 12], dtype=np.int64)],
         }
     )
-    out = _encode_run(avgdl=15.0)(pdf).iloc[0].to_dict()
+    (res,) = list(_encode_rows(avgdl=15.0)(iter([pdf])))
+    out = res.iloc[0].to_dict()
+    assert out["term"] == "t" and out["salt"] == 0
     ids, tfs, dls = decode_postings(_row_to_encoded(out))
     assert ids.tolist() == [3, 7, 9]
     assert tfs.tolist() == [1, 7, 4]  # collided doc 7: tf 2+5
@@ -616,70 +620,6 @@ def test_iceberg_catalog_roundtrip_if_available(spark, tmp_path):
     assert content(idx_t) == content(idx_p)
 
 
-def test_merge_runs_dim_collision_marker_contract():
-    """Unit contract for the hot path's only error-recovery branch: a
-    vocabulary dim with two rows for one term_id raises the marker ValueError
-    and _is_term_id_collision recognizes it. Pinning the marker string here
-    means a Spark upgrade that truncates task error text turns into a test
-    failure instead of silently dead fallback code (index/build.py:640)."""
-    import pandas as pd
-
-    from words_in_context_spark.index import build as b
-
-    fn = b._merge_runs_dim()
-    left = pd.DataFrame({"term_id": [1], "salt": [0]})
-    right = pd.DataFrame(
-        {"term_id": [1, 1], "term": ["aa", "bb"], "bucket": [0, 1]}
-    )
-    with pytest.raises(ValueError) as ei:
-        fn(left, right)
-    assert b._is_term_id_collision(ei.value)
-    # the matcher must also see the marker through JVM exception wrapping,
-    # where the original message survives only as a substring
-    assert b._is_term_id_collision(
-        RuntimeError("org.apache.spark...: ValueError: term_id collision: "
-                     "['aa', 'bb']\n full traceback follows")
-    )
-    assert not b._is_term_id_collision(ValueError("unrelated task failure"))
-
-
-def test_term_id_collision_fallback_matches_hot_path(
-    spark, docs_df, index_dir, tmp_path_factory, monkeypatch
-):
-    """Force real term_id collisions (hash squeezed to a 2-value range) and
-    assert build_index completes via the string-keyed fallback with segments
-    row-identical — including encoded posting blobs — to the hot path's
-    build of the same corpus. Exercises both the marker-matching except and
-    _encode_merge_by_term itself, which never runs in a normal build."""
-    from words_in_context_spark.index import build as b
-
-    monkeypatch.setattr(
-        b, "_term_id_expr",
-        lambda col: F.pmod(F.xxhash64(col), F.lit(2)),
-    )
-    seen = []
-    real_match = b._is_term_id_collision
-
-    def spy(exc):
-        hit = real_match(exc)
-        seen.append(hit)
-        return hit
-
-    monkeypatch.setattr(b, "_is_term_id_collision", spy)
-    d = str(tmp_path_factory.mktemp("collide") / "idx")
-    res = build_index(spark, docs_df, d, n_buckets=N_BUCKETS, n_salts=4)
-    assert res.n_docs == N_DOCS
-    assert True in seen, "hot path never raised the collision marker"
-
-    def seg_rows(ix):
-        rows = spark.read.parquet(os.path.join(ix, "segments")).collect()
-        return sorted(
-            tuple(r[c] for c in sorted(r.asDict())) for r in rows
-        )
-
-    assert seg_rows(d) == seg_rows(index_dir)
-
-
 def _decoded_segments(spark, ix):
     """Segments as {term: (bucket, df, cf, ids, tfs, dls, max_impact_all)}:
     the decoded content two builds of one corpus must agree on."""
@@ -695,27 +635,6 @@ def _decoded_segments(spark, ix):
             dls.tolist(), round(float(d["max_impact_all"]), 6),
         )
     return out
-
-
-def test_concat_run_rows_overlap_guard():
-    """The merge verifies run disjointness; an overlap is a hard error."""
-    import pandas as pd
-
-    from words_in_context_spark.index.build import _concat_run_rows
-
-    def run_row(salt, fd, ld):
-        return dict(
-            salt=salt, df=1, cf=1, doc_bytes=b"a", tf_bytes=b"b",
-            dl_bytes=b"c", first_doc=[fd], last_doc=[ld], n=[1],
-            doc_off=[0], tf_off=[0], dl_off=[0], max_impact=[1.0],
-        )
-
-    ok = _concat_run_rows(
-        pd.DataFrame([run_row(0, 6, 9), run_row(0, 1, 5), run_row(1, 10, 20)])
-    )
-    assert ok["df"] == 3 and ok["first_doc"] == [1, 6, 10]
-    with pytest.raises(ValueError, match="encoded runs overlap"):
-        _concat_run_rows(pd.DataFrame([run_row(0, 1, 7), run_row(0, 6, 9)]))
 
 
 def test_fresh_build_from_tokens_df(spark, docs_df, index_dir,
@@ -923,3 +842,69 @@ def test_row_bearing_splits_gain_no_exchange(spark, tmp_path):
     with _SmallSplits(spark, one_group):
         plan = _plan(tokenize_tf(_widened(spark.read.parquet(one_group), par)))
     assert plan.count("RoundRobinPartitioning") == 1
+
+
+def test_merge_kernel_equals_salt_aligned_encode(spark, tmp_path):
+    """The sorted-run merge (build.merge_runs) pinned against its reference
+    form: on a long-tail corpus built with 16-row Arrow batches — so terms
+    straddle batches and the kernel's carry-over runs — every segment row
+    equals segment_row(term, encode_salt_aligned(the term's sorted forward
+    postings)) byte for byte. Also pins the merge's exchange: an explicit
+    per-core partition count (REPARTITION_BY_NUM), which AQE cannot
+    coalesce into one Python task."""
+    import re
+
+    from words_in_context_spark.index.build import (
+        _salt_boundaries,
+        encode_runs,
+        encode_salt_aligned,
+        merge_runs,
+        segment_row,
+    )
+
+    n_buckets, n_salts = 8, 8
+    pages = generate_pages(120, seed=21, tail_vocab=6000)
+    docs = spark.createDataFrame(
+        [(p["url"], p["text"], p["lang"]) for p in pages],
+        "url string, text string, lang string",
+    )
+    idx = str(tmp_path / "idx")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        res = build_index(spark, docs, idx, n_buckets=n_buckets,
+                          n_salts=n_salts)
+    finally:
+        spark.conf.set(key, prev)
+
+    fwd = (
+        spark.read.parquet(os.path.join(idx, "forward"))
+        .where(F.col("term") != "")
+        .select("term", "doc_id", "tf", "doc_len")
+    )
+    postings: dict[str, list] = {}
+    for r in fwd.collect():
+        postings.setdefault(r["term"], []).append(
+            (r["doc_id"], r["tf"], r["doc_len"])
+        )
+    assert len(postings) >= 1000
+    bounds = _salt_boundaries(n_salts)
+    seg = spark.read.parquet(os.path.join(idx, "segments")).collect()
+    assert sorted(r["term"] for r in seg) == sorted(postings)
+    for r in seg:
+        got = r.asDict()
+        ids, tfs, dls = np.asarray(sorted(postings[got["term"]])).T
+        enc = encode_salt_aligned(ids, tfs, dls, res.avgdl, bounds)
+        assert got == segment_row(got["term"], n_buckets, enc), got["term"]
+
+    plan = str(
+        merge_runs(encode_runs(fwd, res.avgdl, n_salts), n_buckets)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    m = re.search(
+        r"Exchange hashpartitioning\(term#\d+, (\d+)\), REPARTITION_BY_NUM",
+        plan,
+    )
+    assert m, plan
+    assert int(m.group(1)) >= spark.sparkContext.defaultParallelism

@@ -6,8 +6,8 @@ splits the full index build into its two dominant phases —
 
   * forward:  tokenize UDTF -> parquet write (Arrow-heavy Python map,
               NO shuffle; multi-JVM cost here would be scheduler/JIT)
-  * segments: term_id encode shuffle + cogroup merge (the netty
-              inter-process shuffle path in local-cluster mode)
+  * segments: (term, salt) encode shuffle + sorted run merge (the
+              netty inter-process shuffle path in local-cluster mode)
 
 — and times each phase in interleaved (ctrl local[8], variant lc[4,2])
 pairs inside one host window, so the per-phase ratio attributes exactly

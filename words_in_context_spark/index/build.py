@@ -11,14 +11,13 @@ Pipeline (generalizes /root/reference/extract_words.py:332-387 ``process_dir``):
     │ observed during the doc_map write (no separate stats job)
   forward(url, doc_id, term, tf, doc_len)  → parquet checkpoint (+ doc_map),
     │ stamped with FORWARD_FORMAT_VERSION (an unstamped one is rebuilt)
-    │ groupBy(term_id=xxhash64(term), range_salt(doc_id)) collect_list —
-    │ SHUFFLE 1: fixed-width numerics only (no term strings), pre-grouped
-    │ arrays into a mapInPandas encoder (one Arrow row per encode unit)
-  runs(term_id, salt, encoded run)        ← head-term skew bounded by salt
-    │ cogroup(term_id) with the vocabulary dim (term, bucket, term_id) —
-    │ SHUFFLE 2 of COMPRESSED bytes; the dim rides the same shuffle and
-    │ re-attaches the term string; a term_id collision (~v²/2⁶⁵) fails the
-    │ job with a marker error and the driver re-runs string-keyed
+    │ encode_runs: groupBy(term, range_salt(doc_id)) collect_list —
+    │ SHUFFLE 1, pre-grouped arrays into a mapInPandas encoder (one Arrow
+    │ row per encode unit)
+  runs(term, salt, encoded run)           ← head-term skew bounded by salt
+    │ merge_runs: repartition(cores, term) + sort by (term, salt) —
+    │ SHUFFLE 2 of COMPRESSED bytes; one mapInPandas pass cuts each sorted
+    │ batch at term boundaries and byte-concatenates a term's runs
   segments(term, bucket, df, cf, doc_bytes, tf_bytes, blocks...)
     │ write partitionBy(bucket), dynamic partition overwrite
   manifest: one JSON commit per bucket (index/manifest.py; metrics from
@@ -29,14 +28,14 @@ doc_id RANGE (top bits of the uniform xxhash64 doc id), not a hash — so the
 per-salt runs of one term are disjoint, ordered ranges. The merge stage
 therefore concatenates encoded runs WITHOUT decoding: block-local deltas make
 every block self-contained; only block byte-offsets are rebased. A "the"-type
-term at web scale costs S bounded encode tasks + one cheap byte-concat task.
+term at web scale costs S bounded encode tasks + one cheap byte-concat.
 
 doc_id = xxhash64(url): deterministic, shuffle-free assignment. (At 10^12
 docs, expect ~3e4 birthday collisions across 2^64 — acceptable for ranking;
 a dense-id mode would add a sort. Colliding urls are AGGREGATED per posting
-in _encode_run — sum tf, max doc_len — because the codec requires strictly
-increasing doc_ids; without that pre-aggregation a collision between two
-urls sharing a term would crash the encode task.)
+in _encode_unsorted — sum tf, max doc_len — because the codec requires
+strictly increasing doc_ids; without that pre-aggregation a collision
+between two urls sharing a term would crash the encode task.)
 """
 
 from __future__ import annotations
@@ -52,7 +51,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.codec import EncodedPostings, encode_postings
+from ..operators.codec import (
+    EncodedPostings,
+    _encoded_to_row,
+    _row_to_encoded,
+    concat_encoded,
+    encode_postings,
+)
 from ..operators.extract import select_doc_cols, tokenize, tokenize_tf
 from . import manifest as mf
 
@@ -98,23 +103,8 @@ _RUN_SCHEMA = (
     "doc_off array<long>, tf_off array<long>, dl_off array<long>, "
     "max_impact array<float>"
 )
-
-# Numeric-keyed twin of _RUN_SCHEMA for the batch build's hot path: the
-# encode shuffle + its Arrow surface carry term_id = xxhash64(term) instead
-# of the term string, so every shuffled/transferred column is fixed-width
-# (measured: the per-posting string column dominated the Arrow
-# serialize/convert cost of the encode stage — pandas string conversion
-# allocates a Python object per row, numerics are zero-copy). The string
-# comes back via a vocabulary dim cogrouped into the (already-happening)
-# merge shuffle; a driver-side guard falls back to the string path on the
-# ~v²/2⁶⁵ chance of a vocabulary hash collision.
-_RUN_SCHEMA_ID = (
-    "term_id long, salt int, df long, cf long, "
-    "doc_bytes binary, tf_bytes binary, dl_bytes binary, "
-    "first_doc array<long>, last_doc array<long>, n array<int>, "
-    "doc_off array<long>, tf_off array<long>, dl_off array<long>, "
-    "max_impact array<float>"
-)
+_RUN_COLS = [f.strip().split()[0] for f in _RUN_SCHEMA.split(",")]
+_SEGMENT_COLS = [f.strip().split()[0] for f in SEGMENT_SCHEMA.split(",")]
 
 
 def range_salt(doc_id_col, n_salts: int):
@@ -148,54 +138,16 @@ def _encode_unsorted(ids, tfs, dls, avgdl: float) -> EncodedPostings:
     return encode_postings(ids, tfs, dls, avgdl)
 
 
-def _enc_to_run_row(key: str, term, salt: int, enc: EncodedPostings) -> dict:
-    return {
-        key: term,
-        "salt": salt,
-        "df": enc.df,
-        "cf": enc.cf,
-        "doc_bytes": enc.doc_bytes,
-        "tf_bytes": enc.tf_bytes,
-        "dl_bytes": enc.dl_bytes,
-        "first_doc": enc.first_doc.tolist(),
-        "last_doc": enc.last_doc.tolist(),
-        "n": enc.n.tolist(),
-        "doc_off": enc.doc_off.tolist(),
-        "tf_off": enc.tf_off.tolist(),
-        "dl_off": enc.dl_off.tolist(),
-        "max_impact": enc.max_impact.tolist(),
-    }
-
-
-def _encode_run(avgdl: float, key: str = "term"):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf[key].iloc[0]
-        salt = int(pdf["salt"].iloc[0])
-        enc = _encode_unsorted(
-            pdf["doc_id"].to_numpy(),
-            pdf["tf"].to_numpy(),
-            pdf["doc_len"].to_numpy(),
-            avgdl,
-        )
-        return pd.DataFrame([_enc_to_run_row(key, term, salt, enc)])
-
-    return fn
-
-
-_RUN_COLS_ID = [f.strip().split()[0] for f in _RUN_SCHEMA_ID.split(",")]
-
-
 def _encode_rows(avgdl: float):
     """mapInPandas encoder over PRE-GROUPED rows — one input row per
-    (term_id, salt) carrying aligned doc_ids/tfs/dls arrays packed by a
-    JVM-side collect_list aggregation. Compared with groupBy.applyInPandas
-    over raw posting rows, the Arrow surface transfers one row per encode
-    unit instead of one per posting, and the per-partition sort-by-group-key
-    that FlatMapGroupsInPandas requires disappears (the hash aggregate
-    already grouped). Head-term skew stays bounded: the aggregation buffers
-    exactly the per-(term, salt) range the salt design caps, and Spark's
-    ObjectHashAggregate falls back to sort-based aggregation with spill
-    under memory pressure."""
+    (term, salt) carrying aligned doc_ids/tfs/dls arrays packed by a
+    JVM-side collect_list aggregation — emitting one _RUN_SCHEMA row each.
+    The Arrow surface transfers one row per encode unit instead of one per
+    posting, so the term string crosses it once per run, and no per-group
+    sort is needed (the hash aggregate already grouped). Head-term skew stays
+    bounded: the aggregation buffers exactly the per-(term, salt) range the
+    salt design caps, and Spark's ObjectHashAggregate falls back to
+    sort-based aggregation with spill under memory pressure."""
 
     def fn(it):
         for pdf in it:
@@ -208,137 +160,76 @@ def _encode_rows(avgdl: float):
                     avgdl,
                 )
                 out.append(
-                    _enc_to_run_row(
-                        "term_id", int(row.term_id), int(row.salt), enc
-                    )
+                    {"term": row.term, "salt": int(row.salt),
+                     **_encoded_to_row(enc)}
                 )
-            yield pd.DataFrame(out, columns=_RUN_COLS_ID)
+            yield pd.DataFrame(out, columns=_RUN_COLS)
 
     return fn
 
 
-def _concat_run_rows(pdf: pd.DataFrame) -> dict:
-    """Byte-concatenate a term's encoded salt runs (disjoint, ordered doc-id
-    ranges — see module docstring) without decoding; block offsets rebased.
-
-    Runs order by (salt, first doc); both encoders emit one run per salt.
-    Disjointness is VERIFIED, not assumed: overlapping runs would decode
-    to a list with repeated or unordered doc_ids, so an overlap is a hard
-    error rather than a written segment."""
-    pdf = pdf.assign(
-        _fd=pdf["first_doc"].map(lambda a: int(a[0]))
-    ).sort_values(["salt", "_fd"])
-    prev_last = None
-    for fd, row_last in zip(pdf["_fd"], pdf["last_doc"]):
-        if prev_last is not None and fd <= prev_last:
-            raise ValueError(
-                f"encoded runs overlap: first_doc {fd} <= prior "
-                f"last_doc {prev_last}"
-            )
-        prev_last = int(row_last[-1])
-    doc_bytes = b"".join(pdf["doc_bytes"])
-    tf_bytes = b"".join(pdf["tf_bytes"])
-    dl_bytes = b"".join(pdf["dl_bytes"])
-    first_doc, last_doc, n = [], [], []
-    doc_off, tf_off, dl_off, maxi = [], [], [], []
-    dbase = tbase = lbase = 0
-    for row in pdf.itertuples(index=False):
-        first_doc.extend(row.first_doc)
-        last_doc.extend(row.last_doc)
-        n.extend(row.n)
-        doc_off.extend(int(o) + dbase for o in row.doc_off)
-        tf_off.extend(int(o) + tbase for o in row.tf_off)
-        dl_off.extend(int(o) + lbase for o in row.dl_off)
-        maxi.extend(row.max_impact)
-        dbase += len(row.doc_bytes)
-        tbase += len(row.tf_bytes)
-        lbase += len(row.dl_bytes)
-    return {
-        "df": int(pdf["df"].sum()),
-        "cf": int(pdf["cf"].sum()),
-        "doc_bytes": doc_bytes,
-        "tf_bytes": tf_bytes,
-        "dl_bytes": dl_bytes,
-        "first_doc": first_doc,
-        "last_doc": last_doc,
-        "n": n,
-        "doc_off": doc_off,
-        "tf_off": tf_off,
-        "dl_off": dl_off,
-        "max_impact": maxi,
-        "max_impact_all": float(max(maxi)),
-    }
-
-
-def _merge_runs(n_buckets: int):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iloc[0]
-        merged = _concat_run_rows(pdf)
-        # stable bucket assignment: same function as the Spark-side bucketing
-        return pd.DataFrame(
-            [{"term": term, "bucket": _py_bucket(term, n_buckets), **merged}]
+def encode_runs(postings: DataFrame, avgdl: float, n_salts: int) -> DataFrame:
+    """Postings (term, doc_id, tf, doc_len) → one encoded run per
+    (term, salt), as _RUN_SCHEMA rows. Shared by the batch build and the
+    incremental merge."""
+    grouped = (
+        postings.withColumn("salt", range_salt(F.col("doc_id"), n_salts))
+        .groupBy("term", "salt")
+        # one struct list per group, split back into aligned plain arrays
+        # JVM-side (a single aggregate guarantees alignment; three parallel
+        # collect_lists would not contractually)
+        .agg(F.collect_list(F.struct("doc_id", "tf", "doc_len")).alias("ps"))
+        .select(
+            "term",
+            "salt",
+            F.col("ps.doc_id").alias("doc_ids"),
+            F.col("ps.tf").alias("tfs"),
+            F.col("ps.doc_len").alias("dls"),
         )
+    )
+    return grouped.mapInPandas(_encode_rows(avgdl), schema=_RUN_SCHEMA)
+
+
+def _merge_sorted_runs(n_buckets: int):
+    """mapInPandas merge over runs sorted by (term, salt) within each
+    partition: every term's runs are one contiguous slice, found with
+    ``np.flatnonzero`` on the term column, so per-term work is a slice plus
+    ``concat_encoded`` over that slice's records — no per-term pandas call.
+    The last term of a batch may continue in the next one, so its records
+    are carried over."""
+
+    def merged(recs: list[dict]) -> dict:
+        enc = concat_encoded([_row_to_encoded(r) for r in recs])
+        return segment_row(recs[0]["term"], n_buckets, enc)
+
+    def fn(it):
+        carry: list[dict] = []
+        for pdf in it:
+            recs = carry + pdf.to_dict("records")
+            if not recs:
+                continue
+            terms = np.asarray([r["term"] for r in recs], dtype=object)
+            starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+            carry = recs[starts[-1]:]
+            rows = [merged(recs[s:e]) for s, e in zip(starts, starts[1:])]
+            if rows:
+                yield pd.DataFrame(rows, columns=_SEGMENT_COLS)
+        if carry:
+            yield pd.DataFrame([merged(carry)], columns=_SEGMENT_COLS)
 
     return fn
 
 
-_SEGMENT_COLS = [f.strip().split()[0] for f in SEGMENT_SCHEMA.split(",")]
-
-
-def _term_id_expr(col):
-    """Numeric surrogate key for the encode/merge shuffle (hot path keys
-    every per-posting shuffle column fixed-width). Module-level so tests can
-    monkeypatch it to a tiny range and force the collision fallback — the
-    hot path's only error-recovery branch, which would otherwise never run."""
-    return F.xxhash64(col)
-
-
-def _is_term_id_collision(exc: BaseException) -> bool:
-    """True iff a failed Spark job carries ``_merge_runs_dim``'s collision
-    marker. Matched on the message substring because the task's ValueError
-    crosses the JVM boundary wrapped in PythonException text; the marker
-    string is pinned by tests/test_index_build.py so a Spark upgrade that
-    truncates error text is caught as a test failure, not silent dead code."""
-    return "term_id collision" in str(exc)
-
-
-def _merge_runs_dim():
-    """Cogrouped merge for the term_id-keyed batch build: ``left`` carries a
-    term's encoded runs (term_id-keyed), ``right`` exactly one vocabulary-dim
-    row (term_id, term, bucket — bucket computed JVM-side by bucket_expr).
-    The dim rides the merge shuffle that happens anyway, so the term string
-    is never a per-posting shuffle/Arrow column and the segment blobs are
-    shuffled exactly once."""
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            # dim-only key cannot happen (dim derives from the same forward
-            # rows) — but return the right shape defensively
-            return pd.DataFrame([], columns=_SEGMENT_COLS)
-        if len(right) != 1:
-            # two distinct terms hashed to one term_id (~v²/2⁶⁵ per build,
-            # the birthday approximation v²/2/2⁶⁴):
-            # their postings were merged at encode, unrecoverable in-job —
-            # fail the job; the driver catches this marker and re-runs the
-            # segments build on the always-correct string-keyed path. A
-            # task-level detector beats a driver-side pre-check: the
-            # pre-check cost a whole extra pass over forward on every build
-            # to guard against a once-per-many-petabytes event.
-            raise ValueError(
-                f"term_id collision: {sorted(right['term'].tolist())!r}"
-            )
-        merged = _concat_run_rows(left)
-        return pd.DataFrame(
-            [
-                {
-                    "term": right["term"].iloc[0],
-                    "bucket": int(right["bucket"].iloc[0]),
-                    **merged,
-                }
-            ]
-        )[_SEGMENT_COLS]
-
-    return fn
+def merge_runs(runs: DataFrame, n_buckets: int) -> DataFrame:
+    """Encoded runs → one SEGMENT_SCHEMA row per term. The shuffle has an
+    explicit partition count (one per core) so AQE cannot coalesce the
+    Python merge stage into a single task."""
+    par = runs.sparkSession.sparkContext.defaultParallelism
+    return (
+        runs.repartition(par, "term")
+        .sortWithinPartitions("term", "salt")
+        .mapInPandas(_merge_sorted_runs(n_buckets), schema=SEGMENT_SCHEMA)
+    )
 
 
 def _salt_boundaries(n_salts: int) -> np.ndarray:
@@ -357,8 +248,6 @@ def encode_salt_aligned(ids, tfs, dls, avgdl: float, boundaries: np.ndarray):
     query_topk's distributed range slicing depends on (the batch build gets
     it from per-(term, salt) encode tasks; re-encoders — incremental merge,
     tombstone purge — get it here)."""
-    from ..operators.codec import concat_encoded
-
     cuts = np.searchsorted(ids, boundaries)
     runs = []
     prev = 0
@@ -376,18 +265,7 @@ def segment_row(term: str, n_buckets: int, enc: EncodedPostings) -> dict:
     return {
         "term": term,
         "bucket": _py_bucket(term, n_buckets),
-        "df": enc.df,
-        "cf": enc.cf,
-        "doc_bytes": enc.doc_bytes,
-        "tf_bytes": enc.tf_bytes,
-        "dl_bytes": enc.dl_bytes,
-        "first_doc": enc.first_doc.tolist(),
-        "last_doc": enc.last_doc.tolist(),
-        "n": enc.n.tolist(),
-        "doc_off": enc.doc_off.tolist(),
-        "tf_off": enc.tf_off.tolist(),
-        "dl_off": enc.dl_off.tolist(),
-        "max_impact": enc.max_impact.tolist(),
+        **_encoded_to_row(enc),
         "max_impact_all": float(enc.max_impact.max()),
     }
 
@@ -493,10 +371,12 @@ def build_index(
         mf.clear(index_dir)
     os.makedirs(index_dir, exist_ok=True)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # Bound the shuffle straggler tail for the build's two applyInPandas
-    # shuffles: with exactly one task per slot the longest (term, salt) group
-    # — a head term — parks its whole wave on one straggler. 4× finer tasks
-    # cap that tail at ~25% of a wave; AQE coalesces anything oversized.
+    # Bound the shuffle straggler tail of the encode shuffle (the
+    # groupBy(term, salt) aggregate) and the bucket write's repartition; the
+    # run merge sets its own partition count (merge_runs). With exactly one
+    # task per slot the longest (term, salt) group — a head term — parks its
+    # whole wave on one straggler. 4× finer tasks cap that tail at ~25% of a
+    # wave; AQE coalesces anything oversized.
     # Restored on exit: interactive queries measurably prefer coarser tasks.
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
@@ -610,9 +490,9 @@ def _build_index_inner(
             fwd = base_fwd.unionByName(
                 markers.select("url", "term", "tf", "doc_len")
             )
-        # persist doc_id alongside: the encode scan then prunes the url
-        # string column entirely (8 fixed bytes on disk buy a string-free
-        # hot-path scan; computed JVM-side during this write pass)
+        # persist doc_id alongside: the segments scan then prunes the url
+        # string column entirely (8 fixed bytes on disk buy a url-free
+        # scan; computed JVM-side during this write pass)
         fwd = fwd.withColumn("doc_id", F.xxhash64(F.col("url")))
         # N and avgdl observed DURING the forward write — from here the
         # segments job has everything it needs, so doc_map drops off the
@@ -697,9 +577,14 @@ def _build_index_inner(
         ).withColumn("bucket", bucket_expr(F.col("term"), n_buckets)).where(
             F.col("bucket").isin(todo)  # resume: only missing buckets
         )
-        def _write_segments(segments: DataFrame) -> None:
+        runs = encode_runs(
+            base.select("term", "doc_id", "tf", "doc_len"), avgdl, n_salts
+        )
+        t_seg = time.time()
+        try:
             (
-                segments.repartition("bucket")
+                merge_runs(runs, n_buckets)
+                .repartition("bucket")
                 # sort by term within each bucket file: parquet row-group
                 # min/max statistics then prune term lookups inside a
                 # bucket, not just across buckets (query path pushes term
@@ -709,80 +594,6 @@ def _build_index_inner(
                 .partitionBy("bucket")
                 .parquet(os.path.join(index_dir, "segments"))
             )
-
-        def _encode_merge_by_term_id() -> DataFrame:
-            # HOT PATH: every shuffled/Arrow column fixed-width —
-            # encode shuffle carries (term_id, doc_id, tf, doc_len, salt)
-            # only; bucket and the term string are NOT shuffled per posting
-            # (the vocabulary dim re-attaches them at merge).
-            # Vocabulary dim (term, bucket, term_id — one row per distinct
-            # in-scope term): computed INSIDE the segments job so its scan
-            # pipelines with the encode map; rides the merge cogroup's
-            # existing shuffle (no per-posting term strings anywhere).
-            dim = (
-                base.select("term")
-                .distinct()
-                .withColumn("bucket", bucket_expr(F.col("term"), n_buckets))
-                .withColumn("term_id", _term_id_expr(F.col("term")))
-            )
-            postings_in = base.select(
-                _term_id_expr(F.col("term")).alias("term_id"),
-                "doc_id", "tf", "doc_len",
-            )
-            grouped = (
-                postings_in.withColumn(
-                    "salt", range_salt(F.col("doc_id"), n_salts)
-                )
-                .groupBy("term_id", "salt")
-                # one struct list per group, split back into aligned plain
-                # arrays JVM-side (a single aggregate guarantees alignment;
-                # three parallel collect_lists would not contractually)
-                .agg(
-                    F.collect_list(
-                        F.struct("doc_id", "tf", "doc_len")
-                    ).alias("ps")
-                )
-                .select(
-                    "term_id",
-                    "salt",
-                    F.col("ps.doc_id").alias("doc_ids"),
-                    F.col("ps.tf").alias("tfs"),
-                    F.col("ps.doc_len").alias("dls"),
-                )
-            )
-            runs = grouped.mapInPandas(
-                _encode_rows(avgdl), schema=_RUN_SCHEMA_ID
-            )
-            return (
-                runs.groupBy("term_id")
-                .cogroup(dim.groupBy("term_id"))
-                .applyInPandas(_merge_runs_dim(), schema=SEGMENT_SCHEMA)
-            )
-
-        def _encode_merge_by_term() -> DataFrame:
-            # collision fallback (~v²/2⁶⁵ odds per build, detected by the
-            # merge task's marker error): string-keyed shuffles — correct
-            # for any vocabulary, strictly slower per-posting string column
-            postings_in = base.select("term", "doc_id", "tf", "doc_len")
-            runs = (
-                postings_in.withColumn(
-                    "salt", range_salt(F.col("doc_id"), n_salts)
-                )
-                .groupBy("term", "salt")
-                .applyInPandas(_encode_run(avgdl), schema=_RUN_SCHEMA)
-            )
-            return runs.groupBy("term").applyInPandas(
-                _merge_runs(n_buckets), schema=SEGMENT_SCHEMA
-            )
-
-        t_seg = time.time()
-        try:
-            try:
-                _write_segments(_encode_merge_by_term_id())
-            except Exception as e:  # noqa: BLE001 — marker-matched else raise
-                if not _is_term_id_collision(e):
-                    raise
-                _write_segments(_encode_merge_by_term())
         except BaseException:
             # a failed segments job must not leave the concurrent doc_map
             # write dangling — a same-session retry would race its own
@@ -963,11 +774,8 @@ def _drop_tombstoned_postings(
     from ..operators.codec import decode_postings
 
     boundaries = _salt_boundaries(n_salts)
-    cols = [f.strip().split()[0] for f in SEGMENT_SCHEMA.split(",")]
 
     def fn(it):
-        from .query import _row_to_encoded  # runtime import (no cycle)
-
         for pdf in it:
             rows = []
             for rec in pdf.to_dict("records"):
@@ -988,7 +796,7 @@ def _drop_tombstoned_postings(
                     ids[keep], tfs[keep], dls[keep], avgdl, boundaries
                 )
                 rows.append(segment_row(rec["term"], n_buckets, enc))
-            yield pd.DataFrame(rows, columns=cols)
+            yield pd.DataFrame(rows, columns=_SEGMENT_COLS)
 
     return fn
 

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.codec import EncodedPostings
+from ..operators.codec import EncodedPostings, _row_to_encoded
 from ..operators.topk import brute_force_topk, vectorized_topk
 from . import manifest as mf
 from .build import POSITIONS_READ_SCHEMA, _py_bucket
@@ -124,23 +124,6 @@ def _segment_rows(spark: SparkSession, h: IndexHandle, terms: list[str]) -> Data
         # bucket is the partition column → directory pruning; term is a
         # parquet min/max + dictionary pushdown on the sorted segment files
         .where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-    )
-
-
-def _row_to_encoded(row) -> EncodedPostings:
-    return EncodedPostings(
-        df=int(row["df"]),
-        cf=int(row["cf"]),
-        doc_bytes=bytes(row["doc_bytes"]),
-        tf_bytes=bytes(row["tf_bytes"]),
-        dl_bytes=bytes(row["dl_bytes"]),
-        first_doc=np.asarray(row["first_doc"], dtype=np.int64),
-        last_doc=np.asarray(row["last_doc"], dtype=np.int64),
-        n=np.asarray(row["n"], dtype=np.int32),
-        doc_off=np.asarray(row["doc_off"], dtype=np.int64),
-        tf_off=np.asarray(row["tf_off"], dtype=np.int64),
-        dl_off=np.asarray(row["dl_off"], dtype=np.int64),
-        max_impact=np.asarray(row["max_impact"], dtype=np.float32),
     )
 
 

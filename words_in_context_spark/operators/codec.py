@@ -214,21 +214,6 @@ def decode_block(enc: EncodedPostings, bi: int) -> tuple[np.ndarray, np.ndarray,
     return ids, tfs, dls
 
 
-def merge_encoded_runs(
-    runs: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
-    avgdl: float,
-    block: int = BLOCK,
-) -> EncodedPostings:
-    """Merge per-salt sorted runs of (doc_ids, tfs, doc_lens) into one encoded
-    list — the segment-merge stage (salted head-term handling, SURVEY §7 M2).
-    Runs are disjoint in doc_id (each doc contributes one posting per term)."""
-    ids = np.concatenate([r[0] for r in runs])
-    tfs = np.concatenate([r[1] for r in runs])
-    dls = np.concatenate([r[2] for r in runs])
-    order = np.argsort(ids, kind="mergesort")
-    return encode_postings(ids[order], tfs[order], dls[order], avgdl, block=block)
-
-
 def decode_postings_fast(enc: EncodedPostings) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Whole-list decode without per-block Python: one varbyte pass per
     stream, then a segmented cumsum reconstructs doc ids (each block's first
@@ -260,7 +245,17 @@ def concat_encoded(runs: list[EncodedPostings]) -> EncodedPostings:
     """Concatenate encoded runs over DISJOINT, ORDERED doc-id ranges without
     decoding: blocks are self-contained (block-local deltas), so only the
     byte offsets need rebasing. This preserves each run's block boundaries —
-    the property the distributed query's range slicing depends on."""
+    the property the distributed query's range slicing depends on.
+
+    Disjointness is VERIFIED, not assumed: overlapping or out-of-order runs
+    would decode to a list with repeated or unordered doc_ids, so they are a
+    hard error rather than a written segment."""
+    for prev, r in zip(runs, runs[1:]):
+        if r.first_doc[0] <= prev.last_doc[-1]:
+            raise ValueError(
+                f"encoded runs overlap: first_doc {int(r.first_doc[0])} <= "
+                f"prior last_doc {int(prev.last_doc[-1])}"
+            )
     doc_bytes = b"".join(r.doc_bytes for r in runs)
     tf_bytes = b"".join(r.tf_bytes for r in runs)
     dl_bytes = b"".join(r.dl_bytes for r in runs)
@@ -292,3 +287,40 @@ def concat_encoded(runs: list[EncodedPostings]) -> EncodedPostings:
         dl_off=np.concatenate(dl_off),
         max_impact=np.concatenate(maxi),
     )
+
+
+def _row_to_encoded(row) -> EncodedPostings:
+    """A segment/run row (dict or Row, SEGMENT_SCHEMA field names) as an
+    EncodedPostings; ``_encoded_to_row`` is the inverse."""
+    return EncodedPostings(
+        df=int(row["df"]),
+        cf=int(row["cf"]),
+        doc_bytes=bytes(row["doc_bytes"]),
+        tf_bytes=bytes(row["tf_bytes"]),
+        dl_bytes=bytes(row["dl_bytes"]),
+        first_doc=np.asarray(row["first_doc"], dtype=np.int64),
+        last_doc=np.asarray(row["last_doc"], dtype=np.int64),
+        n=np.asarray(row["n"], dtype=np.int32),
+        doc_off=np.asarray(row["doc_off"], dtype=np.int64),
+        tf_off=np.asarray(row["tf_off"], dtype=np.int64),
+        dl_off=np.asarray(row["dl_off"], dtype=np.int64),
+        max_impact=np.asarray(row["max_impact"], dtype=np.float32),
+    )
+
+
+def _encoded_to_row(enc: EncodedPostings) -> dict:
+    """The EncodedPostings fields of a segment/run row, Arrow-ready."""
+    return {
+        "df": enc.df,
+        "cf": enc.cf,
+        "doc_bytes": enc.doc_bytes,
+        "tf_bytes": enc.tf_bytes,
+        "dl_bytes": enc.dl_bytes,
+        "first_doc": enc.first_doc.tolist(),
+        "last_doc": enc.last_doc.tolist(),
+        "n": enc.n.tolist(),
+        "doc_off": enc.doc_off.tolist(),
+        "tf_off": enc.tf_off.tolist(),
+        "dl_off": enc.dl_off.tolist(),
+        "max_impact": enc.max_impact.tolist(),
+    }

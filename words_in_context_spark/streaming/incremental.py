@@ -34,14 +34,16 @@ from pyspark.sql import functions as F
 
 from ..index import manifest as mf
 from ..index.build import (
+    _SEGMENT_COLS,
     SEGMENT_SCHEMA,
-    _RUN_SCHEMA,
-    _encode_run,
+    _salt_boundaries,
     bucket_expr,
-    range_salt,
+    encode_runs,
+    encode_salt_aligned,
     read_tombstone_ids,
+    segment_row,
 )
-from ..operators.codec import decode_postings
+from ..operators.codec import _row_to_encoded, decode_postings
 from ..operators.extract import tokenize_tf
 
 PAGES_SCHEMA = (
@@ -71,15 +73,7 @@ def _merge_with_existing(
         dropped opportunistically — df/metadata come out post-purge for
         merged terms, untouched terms wait for compact_index.
     """
-    from ..index.build import _salt_boundaries, encode_salt_aligned, segment_row
-    from ..index.query import _row_to_encoded
-
     boundaries = _salt_boundaries(n_salts)
-    cols = [
-        "term", "bucket", "df", "cf", "doc_bytes", "tf_bytes", "dl_bytes",
-        "first_doc", "last_doc", "n", "doc_off", "tf_off", "dl_off",
-        "max_impact", "max_impact_all",
-    ]
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         term = pdf["term"].iloc[0]
@@ -101,9 +95,11 @@ def _merge_with_existing(
             keep &= ~np.isin(ids, excluded)
         ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
         if ids.size == 0:
-            return pd.DataFrame([], columns=cols)  # term fully tombstoned
+            return pd.DataFrame([], columns=_SEGMENT_COLS)  # fully tombstoned
         enc = encode_salt_aligned(ids, tfs, dls, avgdl, boundaries)
-        return pd.DataFrame([segment_row(term, n_buckets, enc)], columns=cols)
+        return pd.DataFrame(
+            [segment_row(term, n_buckets, enc)], columns=_SEGMENT_COLS
+        )
 
     return fn
 
@@ -157,12 +153,8 @@ def merge_docs_into_index(
         tf_new.withColumn("doc_id", F.xxhash64(F.col("url")))
         .select("term", "doc_id", "tf", "doc_len")
     )
-    new_runs = (
-        postings_in.withColumn("salt", range_salt(F.col("doc_id"), n_salts))
-        .groupBy("term", "salt")
-        .applyInPandas(_encode_run(avgdl), schema=_RUN_SCHEMA)
-        .persist()  # consumed by bucket collect, two joins, and the write
-    )
+    # persisted: consumed by the bucket collect, two joins and the write
+    new_runs = encode_runs(postings_in, avgdl, n_salts).persist()
 
     affected_buckets = [
         int(r["bucket"])
