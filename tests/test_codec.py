@@ -16,11 +16,18 @@ from words_in_context_spark.operators.codec import (
 )
 
 
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
-@settings(max_examples=100, deadline=None)
+# every varbyte width from 1 to 10 bytes, the uint64 extremes included
+_WIDTHS = st.integers(min_value=1, max_value=64).flatmap(
+    lambda bits: st.integers(min_value=0, max_value=2**bits - 1)
+)
+
+
+@given(st.lists(st.one_of(_WIDTHS, st.sampled_from([0, 2**64 - 1])),
+                max_size=500))
+@settings(max_examples=200, deadline=None)
 def test_varbyte_roundtrip(values):
     arr = np.array(values, dtype=np.uint64)
-    assert np.array_equal(varbyte_decode(varbyte_encode(arr)), arr)
+    assert np.array_equal(varbyte_decode(varbyte_encode(arr), arr.size), arr)
 
 
 def test_varbyte_known():
@@ -29,6 +36,9 @@ def test_varbyte_known():
     assert varbyte_encode(np.array([128], dtype=np.uint64)) == b"\x80\x01"
     assert varbyte_encode(np.array([300], dtype=np.uint64)) == b"\xac\x02"
     assert list(varbyte_decode(b"\xac\x02\x7f")) == [300, 127]
+    assert list(varbyte_decode(b"\xff" * 9 + b"\x01")) == [2**64 - 1]
+    with pytest.raises(ValueError, match="truncated"):
+        varbyte_decode(b"\x7f\xac")
 
 
 @given(

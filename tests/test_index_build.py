@@ -135,6 +135,58 @@ def test_query_matches_pyoracle(spark, index_dir, pages):
             assert gu == eu, f"rank {i}: {gu} != {eu}"
 
 
+def test_term_cache_is_a_byte_bounded_lru(spark, index_dir, monkeypatch):
+    """The handle's score-ready cache: least-recently-used eviction, resident
+    bytes never above the bound, an over-bound list served but not cached,
+    and every answer bit-identical to brute_force_query_local."""
+    from words_in_context_spark.index import query as q
+
+    over = q._ENTRY_OVERHEAD
+    monkeypatch.setattr(q, "TERM_CACHE_BYTES", 3 * over)
+    h = load_index(index_dir)
+    # terms absent from the index are cached as None, charged the overhead
+    for t in ["zz1", "zz2", "zz3", "zz1", "zz4"]:
+        assert query_topk_local(spark, h, [t]) == []
+    assert list(h.cache._entries) == ["zz3", "zz1", "zz4"]
+    assert (h.cache.hits, h.cache.misses) == (1, 4)
+    assert (h.cache.evictions, h.cache.nbytes) == (1, 3 * over)
+
+    # a list whose charge exceeds the whole bound is scored, not cached
+    top = query_topk_local(spark, h, ["the"])
+    assert top and top == brute_force_query_local(spark, h, ["the"])
+    assert "the" not in h.cache._entries and h.cache.nbytes == 3 * over
+    query_topk_local(spark, h, ["the"])
+    assert h.cache.misses == 6
+
+    bound = 2_000
+    monkeypatch.setattr(q, "TERM_CACHE_BYTES", bound)
+    h = load_index(index_dir)
+    terms = sorted(_decoded_segments(spark, index_dir))
+    rng = np.random.default_rng(3)
+    for _ in range(60):
+        qt = list(rng.choice(terms[:40], size=int(rng.integers(1, 4))))
+        assert query_topk_local(spark, h, qt) == \
+            brute_force_query_local(spark, h, qt), qt
+        assert 0 < h.cache.nbytes <= bound
+        assert h.cache.nbytes == sum(
+            q._charge(p) for p in h.cache._entries.values()
+        )
+    assert h.cache.evictions > 0 and h.cache.hits > 0
+
+
+def test_oracle_ignores_score_cache(spark, index_dir):
+    """brute_force_query_local fetches and decodes on its own: a corrupted
+    cached score array changes query_topk_local, never the oracle."""
+    h = load_index(index_dir)
+    query_topk_local(spark, h, QUERY, k=10)
+    found, (ids, scores) = h.cache.get("storm")
+    assert found and ids.size
+    scores[:] = 1e9
+    want = query_topk_local(spark, load_index(index_dir), QUERY, k=10)
+    assert query_topk_local(spark, h, QUERY, k=10) != want
+    assert brute_force_query_local(spark, h, QUERY, k=10) == want
+
+
 def test_resume_converges(spark, index_dir, tmp_path_factory):
     """Simulated mid-build crash: drop doc_map, half the manifest commits and
     their segment partitions → re-run → byte-identical index. The stamped

@@ -713,6 +713,21 @@ def test_phrase_grace_stamps_at_query_time(spark, tmp_path):
     assert json.load(open(stats_path)).get("positions_schema", 0) == 0
 
 
+def _assert_bucket_files_term_sorted(index_dir):
+    """Every bucket file of every bucketed store (segments, positions) lists
+    its terms in non-decreasing order: the row-group min/max statistics that
+    prune term lookups inside a bucket rely on it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(index_dir, "*", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f
+
+
 def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     """Deletion support (training-data pipelines re-crawl and REMOVE docs —
     takedowns, dedup-driven drops — which the reference's append-only cache
@@ -745,9 +760,13 @@ def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     for t in tranches[1:]:
         assert merge_docs_into_index(spark, _pages_df(spark, t), idx) == len(t)
     frozen_avgdl = mf.read_stats(idx)["avgdl"]
+    _assert_bucket_files_term_sorted(idx)
 
     victims = [pages[1], pages[9], pages[16], pages[3]]
     victim_urls = [p["url"] for p in victims]
+    # a handle warmed BEFORE the delete: its cached scores carry the old idf
+    warm = load_index(idx)
+    assert query_topk_local(spark, warm, ["the", "storm"], k=20)
     n = delete_docs(spark, idx, victim_urls + ["https://nope/x"])
     assert n == 4
     assert delete_docs(spark, idx, [victim_urls[0]]) == 0  # idempotent
@@ -765,6 +784,9 @@ def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     top = query_topk_local(spark, h, ["the", "storm"], k=20)
     assert top and not ({d for d, _ in top} & dead)
     assert top == brute_force_query_local(spark, h, ["the", "storm"], k=20)
+    # idf moved with n_live_docs: invalidate() must drop the stale scores
+    warm.invalidate()
+    assert query_topk_local(spark, warm, ["the", "storm"], k=20) == top
     pm = {r["doc_id"] for r in
           phrase_matches_index(spark, h, ["the", "storm"]).collect()}
     assert not (pm & dead)
@@ -785,6 +807,7 @@ def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     assert out["tombstones_purged"] == 4
     assert read_tombstone_ids(idx).size == 0
     assert mf.read_stats(idx)["n_docs"] == 16
+    _assert_bucket_files_term_sorted(idx)
 
     survivors = [p for p in pages if p["url"] not in set(victim_urls)]
     build_index(spark, _pages_df(spark, survivors), batch,

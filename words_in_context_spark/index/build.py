@@ -588,8 +588,11 @@ def _build_index_inner(
                 # sort by term within each bucket file: parquet row-group
                 # min/max statistics then prune term lookups inside a
                 # bucket, not just across buckets (query path pushes term
-                # equality to the scan)
-                .sortWithinPartitions("term")
+                # equality to the scan). bucket leads the sort key because
+                # partitionBy("bucket") re-sorts by bucket alone unless the
+                # rows already are, which would drop a term-only order; the
+                # same holds for every bucketed writer below
+                .sortWithinPartitions("bucket", "term")
                 .write.mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(os.path.join(index_dir, "segments"))
@@ -650,7 +653,7 @@ def _build_index_inner(
                 .withColumn("bucket", bucket_expr(F.col("term"), n_buckets))
                 .select("bucket", "doc_id", "term", "line_ids", "tok_ids")
                 .repartition("bucket")
-                .sortWithinPartitions("term")
+                .sortWithinPartitions("bucket", "term")
                 .write.mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(positions_path)
@@ -939,7 +942,7 @@ def compact_index(
             pos_df = pos_df.join(F.broadcast(tomb_df), "doc_id", "left_anti")
         (
             pos_df.repartition("bucket")
-            .sortWithinPartitions("term")
+            .sortWithinPartitions("bucket", "term")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(pos_dst)
@@ -993,7 +996,7 @@ def compact_index(
         new_seg = spark.read.parquet(tmp_seg)
         (
             new_seg.repartition("bucket")
-            .sortWithinPartitions("term")
+            .sortWithinPartitions("bucket", "term")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(seg_path)

@@ -1,19 +1,24 @@
 """Query engine over the built index: exact BM25 top-k over compressed postings.
 
-Two execution paths sharing one kernel (operators/topk.vectorized_topk):
+Two execution paths sharing one kernel (operators/topk.py: ``score_postings``
+decodes and scores a term's list, ``topk_scored`` accumulates and takes the
+top-k):
 
 * ``query_topk`` — distributed: segment rows for the query terms are read
   with bucket+term pushdown (partition-pruned scan), sliced per doc-id range
   along BLOCK boundaries (zero decode — the build's range-salted layout means
   every term's blocks are already range-ordered), then each range runs the
-  kernel independently inside ``applyInPandas`` and the global top-k is the
-  merge of per-range top-ks (correct because a doc's entire score lives in
-  one range). This is the 1000-executor path: ranges scale with n_salts.
+  whole kernel (``vectorized_topk``) independently inside ``applyInPandas``
+  and the global top-k is the merge of per-range top-ks (correct because a
+  doc's entire score lives in one range). This is the 1000-executor path:
+  ranges scale with n_salts.
 
 * ``query_topk_local`` — driver-side: for interactive/p50-latency use; same
-  kernel, lists fetched via a pyarrow pruned read and cached on the handle
-  (query terms are few; postings stay compressed until the kernel decodes
-  them).
+  accumulate/top-k half of the kernel (``topk_scored``). A term's list is
+  fetched via a pyarrow pruned read, decoded and scored ONCE, and kept on the
+  handle score-ready — (doc_ids, idf × bm25_impact) — in a byte-bounded LRU
+  cache, so a hot query skips the varbyte decode and the rescoring.
+  Tombstones stay a filter after accumulation, so they never enter the cache.
 
 idf = ln(1 + (N - df + 0.5)/(df + 0.5)); N, avgdl from stats.json.
 """
@@ -22,6 +27,7 @@ from __future__ import annotations
 
 import math
 import os
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -30,9 +36,65 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.codec import EncodedPostings, _row_to_encoded
-from ..operators.topk import brute_force_topk, vectorized_topk
+from ..operators.topk import (
+    brute_force_topk,
+    score_postings,
+    topk_scored,
+    vectorized_topk,
+)
 from . import manifest as mf
 from .build import POSITIONS_READ_SCHEMA, _py_bucket
+
+# Byte bound of a handle's score-ready term cache. An entry is charged its
+# arrays (16 B per posting) plus _ENTRY_OVERHEAD, so entries for terms absent
+# from the index (stored as None) count against the bound too.
+TERM_CACHE_BYTES = 64 << 20
+_ENTRY_OVERHEAD = 128
+
+ScoredPart = tuple[np.ndarray, np.ndarray]  # (doc_ids int64, scores float64)
+
+
+def _charge(part: ScoredPart | None) -> int:
+    if part is None:
+        return _ENTRY_OVERHEAD
+    return part[0].nbytes + part[1].nbytes + _ENTRY_OVERHEAD
+
+
+class TermScoreCache:
+    """Least-recently-used map term → score-ready part, or None for a term
+    absent from the index, holding at most TERM_CACHE_BYTES. A part larger
+    than the whole bound is not stored. Counters: ``hits``, ``misses``,
+    ``evictions`` and ``nbytes`` (resident bytes)."""
+
+    def __init__(self) -> None:
+        self._entries: OrderedDict[str, ScoredPart | None] = OrderedDict()
+        self.hits = self.misses = self.evictions = self.nbytes = 0
+
+    def get(self, term: str) -> tuple[bool, ScoredPart | None]:
+        """(found, part); a hit becomes the most recently used entry."""
+        if term not in self._entries:
+            self.misses += 1
+            return False, None
+        self.hits += 1
+        self._entries.move_to_end(term)
+        return True, self._entries[term]
+
+    def put(self, term: str, part: ScoredPart | None) -> None:
+        """Store a missed term's part, evicting least recently used
+        entries until the bound holds."""
+        size = _charge(part)
+        if size > TERM_CACHE_BYTES:
+            return
+        self._entries[term] = part
+        self.nbytes += size
+        while self.nbytes > TERM_CACHE_BYTES:
+            _, old = self._entries.popitem(last=False)
+            self.nbytes -= _charge(old)
+            self.evictions += 1
+
+    def clear(self) -> None:
+        self._entries.clear()
+        self.nbytes = 0
 
 
 @dataclass
@@ -52,13 +114,13 @@ class IndexHandle:
     tombstones: np.ndarray | None = None
 
     def __post_init__(self) -> None:
-        # hot-postings cache for the interactive path: term → EncodedPostings
-        # (None = term absent from the index). Real engines keep hot posting
-        # lists resident; this is the single-node analog. The cache reflects
-        # the index AS OF load_index()/invalidate() — call invalidate() (or
+        # hot-postings cache for the interactive path: term → score-ready
+        # (doc_ids, idf × bm25_impact), None = term absent from the index.
+        # Scores bake in idf(n_live_docs, df), so the cache reflects the
+        # index AS OF load_index()/invalidate() — call invalidate() (or
         # re-load_index) after merge_docs_into_index or delete_docs touches
         # this index.
-        self._term_cache: dict[str, EncodedPostings | None] = {}
+        self.cache = TermScoreCache()
         if self.tombstones is None:
             from .build import read_tombstone_ids
 
@@ -67,7 +129,7 @@ class IndexHandle:
     def invalidate(self) -> None:
         """Drop cached postings and reload tombstones (after an incremental
         merge or delete_docs touched this index)."""
-        self._term_cache.clear()
+        self.cache.clear()
         from .build import read_tombstone_ids
 
         self.tombstones = read_tombstone_ids(self.index_dir)
@@ -160,6 +222,8 @@ def _read_segment_rows_arrow(h: IndexHandle, terms: list[str]) -> dict:
 
     import pyarrow.dataset as ds
 
+    if not terms:
+        return {}
     if not glob.glob(os.path.join(h.segments_path, "bucket=*", "*.parquet")):
         return {}  # structurally-empty index (every doc deleted + compacted)
     buckets = sorted({_py_bucket(t, h.n_buckets) for t in terms})
@@ -171,23 +235,29 @@ def _read_segment_rows_arrow(h: IndexHandle, terms: list[str]) -> dict:
     return {rec["term"]: rec for rec in tbl.to_pylist()}
 
 
-def _collect_lists(
-    spark: SparkSession, h: IndexHandle, terms: list[str]
-) -> list[tuple[EncodedPostings, float]]:
-    wanted = sorted(set(terms))  # canonical term order
-    missing = [t for t in wanted if t not in h._term_cache]
+def _collect_lists(h: IndexHandle, terms: list[str]) -> list[ScoredPart]:
+    """Score-ready parts of the query terms that the index holds, in
+    canonical (sorted) term order. Cache misses are fetched in one pruned
+    read, decoded and scored once, and cached."""
+    wanted = sorted(set(terms))
+    parts: dict[str, ScoredPart | None] = {}
+    missing = []
+    for t in wanted:
+        found, part = h.cache.get(t)
+        if found:
+            parts[t] = part
+        else:
+            missing.append(t)
     if missing:
         rows = _read_segment_rows_arrow(h, missing)
         for t in missing:
-            h._term_cache[t] = (
-                _row_to_encoded(rows[t]) if t in rows else None
-            )
-    lists = []
-    for t in wanted:
-        enc = h._term_cache[t]
-        if enc is not None:
-            lists.append((enc, idf(h.n_live_docs, enc.df)))
-    return lists
+            part = None
+            if t in rows:
+                enc = _row_to_encoded(rows[t])
+                part = score_postings(enc, idf(h.n_live_docs, enc.df), h.avgdl)
+            h.cache.put(t, part)
+            parts[t] = part
+    return [parts[t] for t in wanted if parts[t] is not None]
 
 
 def query_terms(text: str, lang: str = "en", lemmatizer=None) -> list[str]:
@@ -222,8 +292,7 @@ def query_topk_local(
     (tests/test_topk.py). ``k == 0`` gives ``[]``; ``k < 0`` raises
     ValueError."""
     _check_k(k)
-    lists = _collect_lists(spark, h, terms)
-    return vectorized_topk(lists, k, h.avgdl, excluded=h._excluded())
+    return topk_scored(_collect_lists(h, terms), k, excluded=h._excluded())
 
 
 def query_topk(
@@ -355,8 +424,13 @@ def snippet_lookup(
 def brute_force_query_local(
     spark: SparkSession, h: IndexHandle, terms: list[str], k: int = 10
 ) -> list[tuple[int, float]]:
-    """Oracle twin of query_topk_local (decode-everything scorer)."""
-    lists = _collect_lists(spark, h, terms)
+    """Oracle twin of query_topk_local (decode-everything scorer). It fetches
+    the encoded lists itself and decodes them with the reference decoder,
+    never reading the handle's score-ready cache."""
+    wanted = sorted(set(terms))
+    rows = _read_segment_rows_arrow(h, wanted)
+    encs = [_row_to_encoded(rows[t]) for t in wanted if t in rows]
+    lists = [(enc, idf(h.n_live_docs, enc.df)) for enc in encs]
     return brute_force_topk(lists, k, h.avgdl, excluded=h._excluded())
 
 

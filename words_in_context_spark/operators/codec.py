@@ -65,27 +65,25 @@ def varbyte_encode(values: np.ndarray) -> bytes:
 
 
 def varbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Inverse of varbyte_encode. Vectorized via continuation-bit scan."""
+    """Inverse of varbyte_encode. Vectorized: each byte's 7-bit group is
+    shifted by its position within its value, then one segmented sum
+    (``np.add.reduceat`` over the value start offsets) assembles the values;
+    the groups occupy disjoint bits, so the sum is exact."""
     raw = np.frombuffer(buf, dtype=np.uint8)
     if raw.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_last = (raw & 0x80) == 0
-    # value index per byte = count of terminators before this byte
-    value_idx = np.cumsum(is_last) - is_last
-    # position of byte within its value = offset from value start
-    value_starts = np.zeros(raw.size, dtype=np.int64)
-    value_starts[1:] = np.cumsum(is_last[:-1])
-    first_byte_pos = np.searchsorted(value_starts, np.arange(value_starts.max() + 1))
-    byte_pos = np.arange(raw.size) - first_byte_pos[value_idx]
-    n_values = int(is_last.sum())
-    out = np.zeros(n_values, dtype=np.uint64)
-    np.add.at(
-        out,
-        value_idx,
-        (raw & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * byte_pos.astype(np.uint64)),
+    if raw[-1] & 0x80:
+        raise ValueError("truncated varbyte stream: last byte continues")
+    is_last = raw < 0x80
+    starts = np.flatnonzero(np.concatenate(([True], is_last[:-1])))
+    widths = np.diff(np.append(starts, raw.size))
+    byte_pos = np.arange(raw.size) - np.repeat(starts, widths)
+    groups = (raw & np.uint8(0x7F)).astype(np.uint64) << (
+        np.uint64(7) * byte_pos.astype(np.uint64)
     )
+    out = np.add.reduceat(groups, starts)
     if count is not None:
-        assert n_values == count, f"decoded {n_values}, expected {count}"
+        assert out.size == count, f"decoded {out.size}, expected {count}"
     return out
 
 

@@ -189,9 +189,13 @@ def merge_docs_into_index(
     out = untouched.unionByName(merged)
     # term-sorted within each rewritten bucket file, same as the batch build:
     # row-group min/max stats keep pruning term lookups after merges too
-    out.repartition("bucket").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(seg_path)
+    (
+        out.repartition("bucket")
+        .sortWithinPartitions("bucket", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(seg_path)
+    )
     from ..index.build import _touch_success
 
     _touch_success(seg_path)
@@ -254,6 +258,7 @@ def merge_docs_into_index(
             .withColumn("bucket", _bexpr(F.col("term"), n_buckets))
             .select("bucket", "doc_id", "term", "line_ids", "tok_ids")
             .repartition("bucket")
+            .sortWithinPartitions("bucket", "term")
             .write.mode("append")
             .partitionBy("bucket")
             .parquet(positions_path)
