@@ -11,6 +11,7 @@ from words_in_context_spark.corpus import generate_pages
 from words_in_context_spark.index import manifest as mf
 from words_in_context_spark.index.build import build_index
 from words_in_context_spark.index.query import (
+    brute_force_query_local,
     load_index,
     query_topk_local,
 )
@@ -746,7 +747,6 @@ def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     )
     from words_in_context_spark.index.query import (
         _row_to_encoded,
-        brute_force_query_local,
         phrase_matches_index,
     )
     from words_in_context_spark.operators.codec import decode_postings
@@ -757,16 +757,26 @@ def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     batch = str(tmp_path / "batch")
     build_index(spark, _pages_df(spark, tranches[0]), idx,
                 n_buckets=4, n_salts=4, with_positions=True)
+    # a handle warmed BEFORE the merges: it holds cached scores, n_docs and
+    # the segments dataset of the first tranche alone
+    warm = load_index(idx)
+    assert query_topk_local(spark, warm, ["the", "storm"], k=20)
     for t in tranches[1:]:
         assert merge_docs_into_index(spark, _pages_df(spark, t), idx) == len(t)
     frozen_avgdl = mf.read_stats(idx)["avgdl"]
     _assert_bucket_files_term_sorted(idx)
+    # invalidate() must pick up the appended segment files and the new stats
+    warm.invalidate()
+    fresh = load_index(idx)
+    merged = query_topk_local(spark, warm, ["the", "storm"], k=20)
+    assert merged == query_topk_local(spark, fresh, ["the", "storm"], k=20)
+    assert merged == brute_force_query_local(spark, fresh, ["the", "storm"], k=20)
+    assert len(merged) == 20  # "the" is in every page; tranche 0 holds 8
 
     victims = [pages[1], pages[9], pages[16], pages[3]]
     victim_urls = [p["url"] for p in victims]
-    # a handle warmed BEFORE the delete: its cached scores carry the old idf
-    warm = load_index(idx)
-    assert query_topk_local(spark, warm, ["the", "storm"], k=20)
+    # the same handle, warmed again BEFORE the delete: its cached scores
+    # carry the old idf
     n = delete_docs(spark, idx, victim_urls + ["https://nope/x"])
     assert n == 4
     assert delete_docs(spark, idx, [victim_urls[0]]) == 0  # idempotent
@@ -870,6 +880,13 @@ def test_delete_all_docs_then_compact_empties_index(spark, tmp_path):
     assert query_topk_local(spark, h, ["the", "storm"], k=5) == []
 
     out = compact_index(spark, idx)
+    # a handle that read the segment files before compaction and a fresh
+    # one both see the structurally-empty index
+    h.invalidate()
+    assert query_topk_local(spark, h, ["the", "storm"], k=5) == []
+    h_fresh = load_index(idx)
+    assert query_topk_local(spark, h_fresh, ["the", "storm"], k=5) == []
+    assert brute_force_query_local(spark, h_fresh, ["the", "storm"], k=5) == []
     assert out["tombstones_purged"] == 6
     assert read_tombstone_ids(idx).size == 0
     assert mf.read_stats(idx)["n_docs"] == 0

@@ -6,7 +6,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from words_in_context_spark.operators.codec import decode_postings, encode_postings
-from words_in_context_spark.operators.topk import brute_force_topk, vectorized_topk
+from words_in_context_spark.operators.topk import (
+    brute_force_topk,
+    topk_scored,
+    vectorized_topk,
+)
 
 INT64_EDGES = np.array([-(2**63), 2**63 - 1], dtype=np.int64)
 
@@ -142,3 +146,77 @@ def test_pruning_exact_with_negative_idf(seed, neg_term, neg_idf, k):
     )
     lists[neg_term] = (lists[neg_term][0], neg_idf)
     assert vectorized_topk(lists, k, avgdl) == brute_force_topk(lists, k, avgdl)
+
+
+def _sequential_topk(parts, k, excluded=()):
+    """Plain reference over score-ready parts: each doc's contributions
+    summed one by one in part (= canonical term) order, then sorted by
+    (score desc, doc_id asc)."""
+    acc = {}
+    for ids, scores in parts:
+        for d, s in zip(ids.tolist(), scores.tolist()):
+            acc[d] = acc.get(d, 0.0) + s
+    excluded = set(excluded)
+    rows = [(d, s) for d, s in acc.items() if d not in excluded]
+    return sorted(rows, key=lambda t: (-t[1], t[0]))[:k]
+
+
+def _cancelling_parts(seed, n_parts=12, n_docs=300):
+    """``n_parts`` doc-sorted parts sharing most docs, with contributions of
+    magnitude 1e16 and 1: 1e16 + 1 rounds the 1 away, so any summation order
+    other than the sequential one changes score bits."""
+    rng = np.random.default_rng(seed)
+    docs = np.sort(rng.choice(2**40, size=n_docs, replace=False)).astype(np.int64)
+    parts = []
+    for _ in range(n_parts):
+        ids = docs[rng.random(n_docs) < 0.85]
+        mags = rng.choice([1e16, -1e16, 1.0, 3.0, -2.5, 0.125], size=ids.size)
+        parts.append((ids, mags * rng.uniform(1.0, 1.5, size=ids.size)))
+    return parts
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_topk_scored_sums_in_term_order(seed):
+    parts = _cancelling_parts(seed)
+    n = len({d for ids, _ in parts for d in ids.tolist()})
+    exp = _sequential_topk(parts, n)
+    # the data is order-sensitive: summing in reverse term order moves bits
+    assert exp != _sequential_topk(parts[::-1], n)
+    for k in (1, 10, n, n + 1):
+        assert topk_scored(parts, k) == exp[:k], k
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_topk_scored_unsorted_parts(seed):
+    """Sortedness of a part only buys speed: shuffled parts give the same
+    bits."""
+    rng = np.random.default_rng(seed)
+    parts = []
+    for ids, scores in _cancelling_parts(seed):
+        perm = rng.permutation(ids.size)
+        parts.append((ids[perm], scores[perm]))
+    n = len({d for ids, _ in parts for d in ids.tolist()})
+    assert topk_scored(parts, n) == _sequential_topk(parts, n)
+
+
+@pytest.mark.parametrize("k", [0, 1, 19, 20, 21])
+def test_topk_scored_all_equal_scores(k):
+    """20 docs tied at one score (two parts of 0.75 each): every k keeps the
+    smallest doc ids."""
+    ids = np.arange(20, dtype=np.int64)[::-1] * 5 - 40
+    parts = [(np.sort(ids), np.full(20, 0.75)), (ids, np.full(20, 0.75))]
+    got = topk_scored(parts, k)
+    assert got == _sequential_topk(parts, k)
+    assert got == [(d, 1.5) for d in sorted(ids.tolist())[:k]]
+
+
+@pytest.mark.parametrize("k", [1, 7, 40])
+def test_topk_scored_excluded_kth_doc(k):
+    """An excluded set holding the k-th ranked doc (and a few others) pulls
+    the next doc into the top-k."""
+    parts = _cancelling_parts(4, n_parts=9)
+    ranked = [d for d, _ in _sequential_topk(parts, k + 5)]
+    excluded = np.array(sorted({ranked[k - 1], ranked[0], ranked[k + 3]}), dtype=np.int64)
+    got = topk_scored(parts, k, excluded=excluded)
+    assert got == _sequential_topk(parts, k, excluded.tolist())
+    assert not np.isin([d for d, _ in got], excluded).any()

@@ -4,8 +4,9 @@ The kernel has two halves with one seam between them:
 
 * ``score_postings`` decodes one term's list with one varbyte pass per
   stream and scores it: (doc_ids, idf × bm25_impact) — the score-ready part;
-* ``topk_scored`` groups the parts' contributions by doc with ``np.unique``,
-  accumulates them with ``np.add.at`` and takes the tie-safe top-k.
+* ``topk_scored`` merges the doc-sorted parts with one stable argsort,
+  accumulates each doc's contributions with ``np.add.at`` and takes the
+  exact top-k.
 
 ``vectorized_topk`` is the two halves in a row. It runs inside
 ``applyInPandas`` per doc-id range at query time (index/query.py
@@ -77,38 +78,34 @@ def topk_scored(
 ) -> list[tuple[int, float]]:
     """Top-k (doc_id, score) of the per-term score-ready ``parts``
     (canonical term order = list order), sorted by (score desc, doc_id asc).
-    ``np.add.at`` adds a doc's contributions in array order == canonical term
-    order, so float summation order — and therefore every score bit —
-    matches brute_force_topk exactly.
+    The parts are doc-sorted, so a stable argsort merges their runs instead
+    of re-sorting (correctness needs no sortedness, only speed); stability
+    keeps a doc's contributions in term order, which ``np.add.at`` sums in
+    turn, so every score bit matches brute_force_topk (``np.add.reduceat``'s
+    pairwise reduce would not).
 
     ``excluded``: sorted int64 doc_ids that must not appear in results — the
     deleted-docs bitmap analog (index tombstones, index/build.py). The
     result equals retrieval over an index with those docs physically
     purged."""
-    if not parts:
+    if not parts or k <= 0:
         return []
-    all_ids = np.concatenate([ids for ids, _ in parts])
-    all_scores = np.concatenate([scores for _, scores in parts])
-    uniq, inverse = np.unique(all_ids, return_inverse=True)
+    ids = np.concatenate([d for d, _ in parts])
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    start = np.concatenate(([True], np.not_equal(ids[1:], ids[:-1])))
+    uniq = ids[start]
     acc = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(acc, inverse, all_scores)
+    scores = np.concatenate([s for _, s in parts])
+    np.add.at(acc, np.cumsum(start) - 1, scores[order])
     if excluded is not None and excluded.size:
         keep = ~np.isin(uniq, excluded)
         uniq, acc = uniq[keep], acc[keep]
-    if uniq.size <= k:
-        order = np.lexsort((uniq, -acc))
-    else:
-        part = np.argpartition(-acc, k - 1)[: k * 2]  # headroom for ties
-        # among the partition, order fully; ties at the k-th score need the
-        # smallest doc_ids, which argpartition alone doesn't guarantee —
-        # fall back to full sort when the boundary is tied
-        kth = np.partition(-acc, k - 1)[k - 1]
-        boundary_ties = np.count_nonzero(-acc == kth) > 1
-        if boundary_ties:
-            order = np.lexsort((uniq, -acc))
-        else:
-            order = part[np.lexsort((uniq[part], -acc[part]))]
-    return [(int(uniq[i]), float(acc[i])) for i in order[:k]]
+    if uniq.size > k:  # the docs at or above the k-th score, ties included
+        cand = np.flatnonzero(-acc <= np.partition(-acc, k - 1)[k - 1])
+        uniq, acc = uniq[cand], acc[cand]
+    top = np.lexsort((uniq, -acc))[:k]
+    return list(zip(uniq[top].tolist(), acc[top].tolist()))
 
 
 def vectorized_topk(
