@@ -531,11 +531,12 @@ def test_head_term_skew_salting_stress(spark, tmp_path):
     """Pins the skew design's promise (index/build.py:22-27): an ultra-hot
     term costs n_salts bounded encode tasks + one byte-concat. Over a Zipf
     corpus whose head term ('the') hits ~every doc, assert — AFTER a build
-    plus an incremental merge (covering encode_salt_aligned) — that the hot
-    term's postings are salt-balanced (each range within 2x of even), that
-    no block straddles a salt-range boundary (query_topk's range slicing
-    invariant), and that the salted+merged encoding decodes to exactly the
-    one-pass tokenize ground truth (== a direct unsalted encode's content).
+    plus an incremental merge (which re-encodes the term through
+    encode_runs → merge_runs) — that the hot term's postings are
+    salt-balanced (each range within 2x of even), that no block straddles a
+    salt-range boundary (query_topk's range slicing invariant), and that the
+    salted+merged encoding decodes to exactly the one-pass tokenize ground
+    truth (== a direct unsalted encode's content).
     """
     import numpy as np
 

@@ -75,25 +75,22 @@ def test_incremental_equals_batch(spark, dirs):
     incremental_build(spark, dirs["input"], dirs["index"], dirs["ckpt"])
     assert mf.read_stats(dirs["index"])["n_docs"] == N_FIRST + N_SECOND
 
-    # content parity vs a batch build over the full corpus with the SAME
-    # frozen avgdl (postings content must be identical term by term)
-    from words_in_context_spark.index.query import _row_to_encoded
-    from words_in_context_spark.operators.codec import decode_postings
-
+    # byte-level parity vs a batch build over the full corpus with the SAME
+    # frozen avgdl: every segment column (encoded bytes, block metadata,
+    # max_impact) is identical term by term, so the merge encodes exactly
+    # as the build does
     build_index(spark, _pages_df(spark, pages), dirs["batch_index"],
-                n_buckets=8, n_salts=4)
+                n_buckets=8, n_salts=4, avgdl_override=stats0["avgdl"])
 
-    def postings_content(index_dir):
+    def segment_rows(index_dir):
         seg = spark.read.parquet(os.path.join(index_dir, "segments"))
-        out = {}
-        for rec in seg.collect():
-            ids, tfs, dls = decode_postings(_row_to_encoded(rec.asDict()))
-            out[rec["term"]] = list(zip(ids.tolist(), tfs.tolist(), dls.tolist()))
-        return out
+        return {rec["term"]: rec.asDict() for rec in seg.collect()}
 
-    inc = postings_content(dirs["index"])
-    bat = postings_content(dirs["batch_index"])
-    assert inc == bat
+    inc = segment_rows(dirs["index"])
+    bat = segment_rows(dirs["batch_index"])
+    assert inc.keys() == bat.keys()
+    for term, row in inc.items():
+        assert row == bat[term], term
 
     # and the index answers queries over ALL docs
     h = load_index(dirs["index"])
@@ -856,6 +853,45 @@ def test_delete_tombstone_then_compaction_equals_batch(spark, tmp_path):
     assert merge_docs_into_index(spark, _pages_df(spark, [victims[0]]), idx) == 1
     h3 = load_index(idx)
     assert spark.read.parquet(h3.doc_map_path).count() == 17
+
+
+def test_stale_handle_miss_after_merge_names_invalidate(spark, tmp_path):
+    """A handle warmed before merge_docs_into_index keeps the segment files
+    it listed; a cache miss on a bucket the merge replaced must fail with an
+    error that says the index changed and names invalidate(), not a raw
+    FileNotFoundError on a vanished part file, and invalidate() recovers."""
+    import json
+
+    pages = generate_pages(12, seed=83)
+    idx = str(tmp_path / "idx")
+    build_index(spark, _pages_df(spark, pages[:8]), idx,
+                n_buckets=4, n_salts=2)
+    warm = load_index(idx)
+    assert query_topk_local(spark, warm, ["the"], k=5)
+    old_terms = [
+        r["term"]
+        for r in spark.read.parquet(os.path.join(idx, "segments"))
+        .select("term").collect()
+    ]
+    assert merge_docs_into_index(spark, _pages_df(spark, pages[8:]), idx) == 4
+
+    replaced = set()
+    for name in os.listdir(mf.manifest_dir(idx)):
+        with open(os.path.join(mf.manifest_dir(idx), name)) as fh:
+            rec = json.load(fh)
+        if rec["lineage"].get("incremental"):
+            replaced.add(rec["bucket"])
+    from words_in_context_spark.index.build import _py_bucket
+
+    term = next(
+        t for t in sorted(old_terms)
+        if t != "the" and _py_bucket(t, warm.n_buckets) in replaced
+    )
+    with pytest.raises(RuntimeError, match=r"changed on disk.*invalidate\(\)"):
+        query_topk_local(spark, warm, [term], k=5)
+    warm.invalidate()
+    assert query_topk_local(spark, warm, [term], k=5) == \
+        brute_force_query_local(spark, load_index(idx), [term], k=5)
 
 
 def test_delete_all_docs_then_compact_empties_index(spark, tmp_path):

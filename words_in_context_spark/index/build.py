@@ -35,7 +35,9 @@ docs, expect ~3e4 birthday collisions across 2^64 — acceptable for ranking;
 a dense-id mode would add a sort. Colliding urls are AGGREGATED per posting
 in _encode_unsorted — sum tf, max doc_len — because the codec requires
 strictly increasing doc_ids; without that pre-aggregation a collision
-between two urls sharing a term would crash the encode task.)
+between two urls sharing a term would crash the encode task. In an
+incremental merge, a new url whose id equals an indexed doc's replaces that
+doc's postings in the terms the batch touches.)
 """
 
 from __future__ import annotations
@@ -606,26 +608,12 @@ def _build_index_inner(
             raise
         _touch_success(os.path.join(index_dir, "segments"))
         phases["segments_s"] = round(time.time() - t_seg, 2)
-        # ---- per-bucket manifest commit (metrics from the written files) ---
-        metrics = _bucket_metrics(
-            spark, os.path.join(index_dir, "segments"), todo
+        _commit_buckets(
+            index_dir,
+            os.path.join(index_dir, "segments"),
+            todo,
+            {"n_docs": int(n_docs), "n_salts": n_salts, "tokenizer": tok_name},
         )
-        for b in todo:
-            m = metrics.get(b)
-            mf.commit_bucket(
-                index_dir,
-                b,
-                {
-                    "n_terms": int(m["n_terms"]) if m else 0,
-                    "n_postings": int(m["n_postings"]) if m else 0,
-                    "bytes": int(m["bytes"]) if m else 0,
-                    "lineage": {
-                        "n_docs": int(n_docs),
-                        "n_salts": n_salts,
-                        "tokenizer": tok_name,
-                    },
-                },
-            )
 
     # barrier: doc_map must be on disk before the positions join reads it
     # and before stats.json commits the build
@@ -804,9 +792,7 @@ def _drop_tombstoned_postings(
     return fn
 
 
-def _bucket_metrics(
-    spark: SparkSession, seg_path: str, buckets: list[int]
-) -> dict[int, dict]:
+def _bucket_metrics(seg_path: str, buckets: list[int]) -> dict[int, dict]:
     """Manifest metrics for the given bucket partitions of the WRITTEN
     segment store. Computed entirely DRIVER-SIDE from parquet metadata and
     the tiny ``df`` column (pyarrow): n_terms comes from row-group counts
@@ -847,6 +833,27 @@ def _bucket_metrics(
             "bytes": int(disk),
         }
     return out
+
+
+def _commit_buckets(
+    index_dir: str, seg_path: str, buckets: list[int], lineage: dict
+) -> None:
+    """Manifest commit of the given buckets of the WRITTEN segment store:
+    one JSON record each, metrics from _bucket_metrics (zeros for a bucket
+    that holds no term), tagged with the writer's ``lineage``."""
+    metrics = _bucket_metrics(seg_path, buckets)
+    for b in buckets:
+        m = metrics.get(b, {})
+        mf.commit_bucket(
+            index_dir,
+            b,
+            {
+                "n_terms": int(m.get("n_terms", 0)),
+                "n_postings": int(m.get("n_postings", 0)),
+                "bytes": int(m.get("bytes", 0)),
+                "lineage": lineage,
+            },
+        )
 
 
 def compact_index(
@@ -1012,22 +1019,12 @@ def compact_index(
                 shutil.rmtree(
                     os.path.join(seg_path, f"bucket={b}"), ignore_errors=True
                 )
-        metrics = _bucket_metrics(spark, seg_path, old_buckets)
-        for b in old_buckets:
-            m = metrics.get(b)
-            mf.commit_bucket(
-                index_dir,
-                b,
-                {
-                    "n_terms": int(m["n_terms"]) if m else 0,
-                    "n_postings": int(m["n_postings"]) if m else 0,
-                    "bytes": int(m["bytes"]) if m else 0,
-                    "lineage": {
-                        "compaction": new_g,
-                        "tombstones_purged": int(excluded.size),
-                    },
-                },
-            )
+        _commit_buckets(
+            index_dir,
+            seg_path,
+            old_buckets,
+            {"compaction": new_g, "tombstones_purged": int(excluded.size)},
+        )
         out["segments_purged_buckets"] = len(old_buckets)
 
     stats["generation"] = new_g

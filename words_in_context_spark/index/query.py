@@ -243,7 +243,9 @@ def _read_segment_rows_arrow(h: IndexHandle, terms: list[str]) -> dict:
     is pushed to parquet row groups. The handle's dataset is discovered once,
     so a miss pays only the read: a one-term fetch from the 800-doc, 32-bucket
     perfbench ``search`` index takes a median 1.5 ms on a 4-core host, where
-    re-listing and re-discovering the files on each miss took 3.0 ms."""
+    re-listing and re-discovering the files on each miss took 3.0 ms.
+    A bucket file that a merge or compaction replaced since the discovery
+    raises a RuntimeError that names ``invalidate()``."""
     import pyarrow.dataset as ds
 
     if not terms or h.segments_dataset is None:
@@ -252,7 +254,14 @@ def _read_segment_rows_arrow(h: IndexHandle, terms: list[str]) -> dict:
     expr = ds.field("bucket").isin(buckets) & ds.field("term").isin(
         list(set(terms))
     )
-    tbl = h.segments_dataset.to_table(filter=expr)
+    try:
+        tbl = h.segments_dataset.to_table(filter=expr)
+    except FileNotFoundError as e:
+        raise RuntimeError(
+            f"index at {h.index_dir} changed on disk since this handle "
+            f"listed its segment files (merge, compaction or rebuild); call "
+            f"invalidate() on the handle, or load_index() again"
+        ) from e
     return {rec["term"]: rec for rec in tbl.to_pylist()}
 
 

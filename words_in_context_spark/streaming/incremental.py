@@ -8,6 +8,13 @@ into a streaming pipeline:
       → trigger(availableNow)                 # batch-incremental execution
       → foreachBatch(merge_docs_into_index)   # exactly-once per micro-batch
 
+Each batch rebuilds the terms it touches with the batch build's own postings
+assembly: the touched terms' old segment rows are decoded back to
+(term, doc_id, tf, doc_len) posting rows (_decode_live_postings), unioned with
+the batch's new postings and fed through ``encode_runs`` → ``merge_runs``
+(index/build.py); untouched terms of the affected buckets pass through as
+stored rows.
+
 Exactly-once is layered:
   * the file-source checkpoint guarantees each input FILE is processed once;
   * an anti-join against doc_map guarantees each URL is indexed once even if
@@ -34,72 +41,52 @@ from pyspark.sql import functions as F
 
 from ..index import manifest as mf
 from ..index.build import (
-    _SEGMENT_COLS,
+    POSITIONS_READ_SCHEMA,
+    POSITIONS_SCHEMA_VERSION,
     SEGMENT_SCHEMA,
-    _salt_boundaries,
+    _commit_buckets,
+    _touch_success,
     bucket_expr,
     encode_runs,
-    encode_salt_aligned,
+    merge_runs,
     read_tombstone_ids,
-    segment_row,
 )
-from ..operators.codec import _row_to_encoded, decode_postings
-from ..operators.extract import tokenize_tf
+from ..operators.codec import _row_to_encoded, decode_postings_fast
+from ..operators.extract import tokenize, tokenize_tf
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
 
+# the (term, doc_id, tf, doc_len) posting rows encode_runs consumes, typed
+# as tokenize_tf emits them so old and new postings union by name
+_POSTINGS_SCHEMA = "term string, doc_id long, tf int, doc_len int"
 
-def _merge_with_existing(
-    avgdl: float,
-    n_buckets: int,
-    n_salts: int,
-    excluded: np.ndarray | None = None,
-):
-    """applyInPandas per term: decode existing segment row (if any) + new
-    encoded runs, concatenate, sort by doc_id, re-encode with frozen avgdl.
 
-    Invariants maintained here:
-      * duplicate doc_ids are dropped (keep-first) — a replayed micro-batch
-        whose previous attempt crashed between the segment overwrite and the
-        doc_map append re-delivers identical postings; deduping makes the
-        merge idempotent instead of tripping the strictly-increasing assert;
-      * re-encoding is SALT-RANGE ALIGNED (encode_salt_aligned) so no block
-        straddles a range boundary — query_topk's distributed range slicing
-        depends on it;
-      * ``excluded`` (sorted tombstoned doc_ids, index/build.delete_docs):
-        since the term is being decoded anyway, its tombstoned postings are
-        dropped opportunistically — df/metadata come out post-purge for
-        merged terms, untouched terms wait for compact_index.
-    """
-    boundaries = _salt_boundaries(n_salts)
+def _decode_live_postings(excluded: np.ndarray):
+    """mapInPandas over segment rows → their posting rows, minus the
+    tombstoned ``excluded`` doc_ids (sorted; index/build.delete_docs): the
+    terms are being re-encoded anyway, so their tombstoned postings are
+    purged now — df/metadata come out post-purge for merged terms, untouched
+    terms wait for compact_index."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iloc[0]
-        ids_parts, tf_parts, dl_parts = [], [], []
-        for rec in pdf.to_dict("records"):
-            enc = _row_to_encoded(rec)
-            ids, tfs, dls = decode_postings(enc)
-            ids_parts.append(ids)
-            tf_parts.append(tfs)
-            dl_parts.append(dls)
-        ids = np.concatenate(ids_parts)
-        tfs = np.concatenate(tf_parts)
-        dls = np.concatenate(dl_parts)
-        order = np.argsort(ids, kind="mergesort")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-        keep = np.ones(ids.size, dtype=bool)
-        keep[1:] = ids[1:] != ids[:-1]  # idempotent replay: drop duplicates
-        if excluded is not None and excluded.size:
-            keep &= ~np.isin(ids, excluded)
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if ids.size == 0:
-            return pd.DataFrame([], columns=_SEGMENT_COLS)  # fully tombstoned
-        enc = encode_salt_aligned(ids, tfs, dls, avgdl, boundaries)
-        return pd.DataFrame(
-            [segment_row(term, n_buckets, enc)], columns=_SEGMENT_COLS
-        )
+    def fn(it):
+        for pdf in it:
+            terms, ids_p, tf_p, dl_p = [], [], [], []
+            for rec in pdf.to_dict("records"):
+                ids, tfs, dls = decode_postings_fast(_row_to_encoded(rec))
+                keep = ~np.isin(ids, excluded)
+                terms.append(np.full(int(keep.sum()), rec["term"], object))
+                ids_p.append(ids[keep])
+                tf_p.append(tfs[keep])
+                dl_p.append(dls[keep])
+            if terms:
+                yield pd.DataFrame({
+                    "term": np.concatenate(terms),
+                    "doc_id": np.concatenate(ids_p),
+                    "tf": np.concatenate(tf_p).astype(np.int32),
+                    "doc_len": np.concatenate(dl_p).astype(np.int32),
+                })
 
     return fn
 
@@ -153,12 +140,9 @@ def merge_docs_into_index(
         tf_new.withColumn("doc_id", F.xxhash64(F.col("url")))
         .select("term", "doc_id", "tf", "doc_len")
     )
-    # persisted: consumed by the bucket collect, two joins and the write
-    new_runs = encode_runs(postings_in, avgdl, n_salts).persist()
-
     affected_buckets = [
         int(r["bucket"])
-        for r in new_runs.select(
+        for r in postings_in.select(
             bucket_expr(F.col("term"), n_buckets).alias("bucket")
         ).distinct().collect()
     ]
@@ -168,23 +152,23 @@ def merge_docs_into_index(
         F.col("bucket").isin(affected_buckets)
     )
     # untouched terms in affected buckets pass through unchanged; terms with
-    # new postings get decode-merge-re-encode
-    new_terms = new_runs.select("term").distinct()
+    # new postings are decoded and re-encoded together with them. Old
+    # postings of the batch's own doc_ids are dropped: on a replay they are
+    # the copies a crashed attempt wrote, and a new url whose xxhash64 id
+    # equals an indexed doc's replaces that doc's postings in these terms
+    new_terms = postings_in.select("term").distinct()
     untouched = old.join(new_terms, "term", "left_anti")
-    to_merge_old = old.join(new_terms, "term", "left_semi").drop(
-        "bucket", "max_impact_all"
-    )
-    runs_as_segments = new_runs.drop("salt")
-    merged = (
-        to_merge_old.unionByName(runs_as_segments, allowMissingColumns=False)
-        .groupBy("term")
-        .applyInPandas(
-            _merge_with_existing(
-                avgdl, n_buckets, n_salts,
-                excluded=read_tombstone_ids(index_dir),
-            ),
-            SEGMENT_SCHEMA,
+    old_postings = (
+        old.join(new_terms, "term", "left_semi")
+        .mapInPandas(
+            _decode_live_postings(read_tombstone_ids(index_dir)),
+            _POSTINGS_SCHEMA,
         )
+        .join(new_map.select("doc_id"), "doc_id", "left_anti")
+    )
+    merged = merge_runs(
+        encode_runs(old_postings.unionByName(postings_in), avgdl, n_salts),
+        n_buckets,
     )
     out = untouched.unionByName(merged)
     # term-sorted within each rewritten bucket file, same as the batch build:
@@ -196,16 +180,15 @@ def merge_docs_into_index(
         .partitionBy("bucket")
         .parquet(seg_path)
     )
-    from ..index.build import _touch_success
-
     _touch_success(seg_path)
 
     # Replay-idempotency ordering: doc_map is appended LAST of the data
     # writes — it is the replay gate (the anti-join above), so every earlier
-    # write must tolerate a re-run. Segments tolerate it via keep-first dedup
-    # in _merge_with_existing; positions via the doc_id anti-join below. A
-    # crash anywhere before the doc_map append simply re-runs the whole
-    # batch; after it, the batch is a no-op whose repair pass fixes stats.
+    # write must tolerate a re-run. Segments tolerate it via the anti-join of
+    # the old postings against the batch's doc_ids above; positions via the
+    # doc_id anti-join below. A crash anywhere before the doc_map append
+    # simply re-runs the whole batch; after it, the batch is a no-op whose
+    # repair pass fixes stats.
 
     # positional store (if present) is (doc_id, term, line_ids): new docs
     # only ADD rows — append, no rewrite; anti-join by doc_id so a replayed
@@ -213,10 +196,6 @@ def merge_docs_into_index(
     # append) never duplicates rows
     positions_path = mf.data_dir(index_dir, "positions", generation)
     if os.path.exists(positions_path):
-        from ..index.build import POSITIONS_SCHEMA_VERSION
-        from ..index.build import bucket_expr as _bexpr
-        from ..operators.extract import tokenize as _tokenize
-
         if int(stats.get("positions_schema", 0)) < POSITIONS_SCHEMA_VERSION:
             # Pre-versioning store: appending v2 rows (with tok_ids) into a
             # v1 store creates a mixed-schema parquet dir whose plain reads
@@ -238,8 +217,6 @@ def merge_docs_into_index(
                 )
             stats["positions_schema"] = POSITIONS_SCHEMA_VERSION
 
-        from ..index.build import POSITIONS_READ_SCHEMA
-
         already = (
             spark.read.schema(POSITIONS_READ_SCHEMA)
             .parquet(positions_path)
@@ -247,7 +224,7 @@ def merge_docs_into_index(
             .distinct()
         )
         (
-            _tokenize(fresh)
+            tokenize(fresh)
             .groupBy("url", "term")
             .agg(
                 F.array_sort(F.collect_list("line_id")).alias("line_ids"),
@@ -255,7 +232,7 @@ def merge_docs_into_index(
             )
             .join(new_map.select("url", "doc_id"), "url")
             .join(already, "doc_id", "left_anti")
-            .withColumn("bucket", _bexpr(F.col("term"), n_buckets))
+            .withColumn("bucket", bucket_expr(F.col("term"), n_buckets))
             .select("bucket", "doc_id", "term", "line_ids", "tok_ids")
             .repartition("bucket")
             .sortWithinPartitions("bucket", "term")
@@ -269,21 +246,12 @@ def merge_docs_into_index(
 
     # refresh manifest metrics for affected buckets + stats (pruned read +
     # on-disk bucket sizes — never re-reads the posting byte columns)
-    from ..index.build import _bucket_metrics
-
-    metrics = _bucket_metrics(spark, seg_path, affected_buckets)
-    for b in affected_buckets:
-        m = metrics.get(b)
-        mf.commit_bucket(
-            index_dir,
-            b,
-            {
-                "n_terms": int(m["n_terms"]) if m else 0,
-                "n_postings": int(m["n_postings"]) if m else 0,
-                "bytes": int(m["bytes"]) if m else 0,
-                "lineage": {"incremental": True, "added_docs": int(n_new)},
-            },
-        )
+    _commit_buckets(
+        index_dir,
+        seg_path,
+        affected_buckets,
+        {"incremental": True, "added_docs": int(n_new)},
+    )
     # n_docs from the source of truth (doc_map after the append), never by
     # incrementing the old counter — a replayed batch or repaired crash
     # window would otherwise skew idf permanently
@@ -291,7 +259,6 @@ def merge_docs_into_index(
     mf.write_stats(index_dir, stats)
     tf_new.unpersist()
     new_map.unpersist()
-    new_runs.unpersist()
     return int(n_new)
 
 
