@@ -1,7 +1,7 @@
 """Maintenance parity probe: fingerprint the index that a fixed sequence of
 maintenance steps leaves behind, so two checkouts can be compared.
 
-Sequence (one Spark session, ``local[4]``):
+Sequence (one Spark session, ``local[4]``, seed 7, 16 buckets, 8 salts):
 
   build_index(first ``--docs`` pages) → delete_docs(every 10th url)
   → merge_docs_into_index(next ``--batch`` pages)
@@ -14,6 +14,7 @@ wall seconds and Spark job count of each merge. Equal hashes from two
 checkouts mean the maintenance steps wrote the same index.
 
     python tools/maintenance_parity.py [--root CHECKOUT] [--tail-vocab 2500]
+        [--docs 200] [--batch 60]
 
 ``--root`` imports the engine from another checkout (default: this one),
 e.g. a ``git clone`` of the parent commit; run the two sides one after the
@@ -32,6 +33,10 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# fixed so that two runs always fingerprint the same configuration
+SEED = 7
+N_BUCKETS = 16
+N_SALTS = 8
 
 
 def _sha(rows) -> str:
@@ -47,9 +52,6 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=200)
     ap.add_argument("--batch", type=int, default=60)
     ap.add_argument("--tail-vocab", type=int, default=0)
-    ap.add_argument("--seed", type=int, default=7)
-    ap.add_argument("--n-buckets", type=int, default=16)
-    ap.add_argument("--n-salts", type=int, default=8)
     args = ap.parse_args()
     sys.path.insert(0, os.path.abspath(args.root))
 
@@ -64,7 +66,7 @@ def main() -> None:
 
     spark = get_spark(cores=4, app_name="wics-maint-parity",
                       shuffle_partitions=4)
-    pages = generate_pages(args.docs + 2 * args.batch, seed=args.seed,
+    pages = generate_pages(args.docs + 2 * args.batch, seed=SEED,
                            tail_vocab=args.tail_vocab)
     first = pages[: args.docs]
     batch_a = pages[args.docs: args.docs + args.batch]
@@ -82,8 +84,8 @@ def main() -> None:
     sc = spark.sparkContext
     merges = []
     try:
-        build_index(spark, df_of(first), idx, n_buckets=args.n_buckets,
-                    n_salts=args.n_salts)
+        build_index(spark, df_of(first), idx, n_buckets=N_BUCKETS,
+                    n_salts=N_SALTS)
         delete_docs(spark, idx, [p["url"] for p in first[::10]])
         for i, batch in enumerate((batch_a, batch_b)):
             group = f"parity-merge-{i}"

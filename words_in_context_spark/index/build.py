@@ -170,25 +170,55 @@ def _encode_rows(avgdl: float):
     return fn
 
 
-def encode_runs(postings: DataFrame, avgdl: float, n_salts: int) -> DataFrame:
+def encode_runs(
+    postings: DataFrame,
+    avgdl: float,
+    n_salts: int,
+    lists: DataFrame | None = None,
+) -> DataFrame:
     """Postings (term, doc_id, tf, doc_len) → one encoded run per
     (term, salt), as _RUN_SCHEMA rows. Shared by the batch build and the
-    incremental merge."""
-    grouped = (
-        postings.withColumn("salt", range_salt(F.col("doc_id"), n_salts))
-        .groupBy("term", "salt")
-        # one struct list per group, split back into aligned plain arrays
-        # JVM-side (a single aggregate guarantees alignment; three parallel
-        # collect_lists would not contractually)
-        .agg(F.collect_list(F.struct("doc_id", "tf", "doc_len")).alias("ps"))
-        .select(
-            "term",
-            "salt",
-            F.col("ps.doc_id").alias("doc_ids"),
-            F.col("ps.tf").alias("tfs"),
-            F.col("ps.doc_len").alias("dls"),
+    incremental merge, whose already-indexed postings arrive as ``lists``:
+    (term, salt, doc_ids, tfs, dls) rows grouped in the decode kernel, so
+    they cross the shuffle as arrays rather than one row per posting."""
+    salted = postings.withColumn("salt", range_salt(F.col("doc_id"), n_salts))
+    # one struct list per group, split back into aligned plain arrays
+    # JVM-side (a single aggregate guarantees alignment; three parallel
+    # collect_lists would not contractually)
+    if lists is None:
+        grouped = (
+            salted.groupBy("term", "salt")
+            .agg(
+                F.collect_list(F.struct("doc_id", "tf", "doc_len")).alias("ps")
+            )
+            .select(
+                "term",
+                "salt",
+                F.col("ps.doc_id").alias("doc_ids"),
+                F.col("ps.tf").alias("tfs"),
+                F.col("ps.doc_len").alias("dls"),
+            )
         )
-    )
+    else:
+        grouped = (
+            salted.select(
+                "term",
+                "salt",
+                F.array("doc_id").alias("doc_ids"),
+                F.array("tf").alias("tfs"),
+                F.array("doc_len").alias("dls"),
+            )
+            .unionByName(lists)
+            .groupBy("term", "salt")
+            .agg(F.collect_list(F.struct("doc_ids", "tfs", "dls")).alias("ps"))
+            .select(
+                "term",
+                "salt",
+                F.flatten("ps.doc_ids").alias("doc_ids"),
+                F.flatten("ps.tfs").alias("tfs"),
+                F.flatten("ps.dls").alias("dls"),
+            )
+        )
     return grouped.mapInPandas(_encode_rows(avgdl), schema=_RUN_SCHEMA)
 
 

@@ -9,9 +9,9 @@ into a streaming pipeline:
       → foreachBatch(merge_docs_into_index)   # exactly-once per micro-batch
 
 Each batch rebuilds the terms it touches with the batch build's own postings
-assembly: the touched terms' old segment rows are decoded back to
-(term, doc_id, tf, doc_len) posting rows (_decode_live_postings), unioned with
-the batch's new postings and fed through ``encode_runs`` → ``merge_runs``
+assembly: the touched terms' old segment rows are decoded back to one
+posting list per (term, salt) (_decode_live_lists), grouped with the batch's
+new postings in ``encode_runs`` and merged by ``merge_runs``
 (index/build.py); untouched terms of the affected buckets pass through as
 stored rows.
 
@@ -45,6 +45,7 @@ from ..index.build import (
     POSITIONS_SCHEMA_VERSION,
     SEGMENT_SCHEMA,
     _commit_buckets,
+    _salt_boundaries,
     _touch_success,
     bucket_expr,
     encode_runs,
@@ -58,35 +59,40 @@ PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
 
-# the (term, doc_id, tf, doc_len) posting rows encode_runs consumes, typed
-# as tokenize_tf emits them so old and new postings union by name
-_POSTINGS_SCHEMA = "term string, doc_id long, tf int, doc_len int"
+# the (term, salt) posting lists encode_runs takes beside the new postings,
+# typed as tokenize_tf emits tf/doc_len so the two union by name
+_LISTS_SCHEMA = (
+    "term string, salt int, doc_ids array<long>, tfs array<int>, "
+    "dls array<int>"
+)
 
 
-def _decode_live_postings(excluded: np.ndarray):
-    """mapInPandas over segment rows → their posting rows, minus the
-    tombstoned ``excluded`` doc_ids (sorted; index/build.delete_docs): the
-    terms are being re-encoded anyway, so their tombstoned postings are
-    purged now — df/metadata come out post-purge for merged terms, untouched
-    terms wait for compact_index."""
+def _decode_live_lists(excluded: np.ndarray, n_salts: int):
+    """mapInPandas over segment rows → one (term, salt) posting list per
+    salt range, minus the sorted ``excluded`` doc_ids: tombstoned ones
+    (index/build.delete_docs), purged now because the terms are re-encoded
+    anyway — df/metadata come out post-purge for merged terms, untouched
+    terms wait for compact_index — and the batch's own, whose old copies the
+    new postings replace."""
+    boundaries = _salt_boundaries(n_salts)
 
     def fn(it):
         for pdf in it:
-            terms, ids_p, tf_p, dl_p = [], [], [], []
+            out = []
             for rec in pdf.to_dict("records"):
                 ids, tfs, dls = decode_postings_fast(_row_to_encoded(rec))
                 keep = ~np.isin(ids, excluded)
-                terms.append(np.full(int(keep.sum()), rec["term"], object))
-                ids_p.append(ids[keep])
-                tf_p.append(tfs[keep])
-                dl_p.append(dls[keep])
-            if terms:
-                yield pd.DataFrame({
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(ids_p),
-                    "tf": np.concatenate(tf_p).astype(np.int32),
-                    "doc_len": np.concatenate(dl_p).astype(np.int32),
-                })
+                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+                cuts = np.r_[0, np.searchsorted(ids, boundaries), ids.size]
+                for salt, (a, b) in enumerate(zip(cuts[:-1], cuts[1:])):
+                    if b > a:
+                        out.append((rec["term"], salt, ids[a:b],
+                                    tfs[a:b].astype(np.int32),
+                                    dls[a:b].astype(np.int32)))
+            if out:
+                yield pd.DataFrame(
+                    out, columns=["term", "salt", "doc_ids", "tfs", "dls"]
+                )
 
     return fn
 
@@ -156,19 +162,18 @@ def merge_docs_into_index(
     # postings of the batch's own doc_ids are dropped: on a replay they are
     # the copies a crashed attempt wrote, and a new url whose xxhash64 id
     # equals an indexed doc's replaces that doc's postings in these terms
+    batch_ids = np.asarray(
+        [r["doc_id"] for r in new_map.select("doc_id").collect()],
+        dtype=np.int64,
+    )
+    excluded = np.union1d(read_tombstone_ids(index_dir), batch_ids)
     new_terms = postings_in.select("term").distinct()
     untouched = old.join(new_terms, "term", "left_anti")
-    old_postings = (
-        old.join(new_terms, "term", "left_semi")
-        .mapInPandas(
-            _decode_live_postings(read_tombstone_ids(index_dir)),
-            _POSTINGS_SCHEMA,
-        )
-        .join(new_map.select("doc_id"), "doc_id", "left_anti")
+    old_lists = old.join(new_terms, "term", "left_semi").mapInPandas(
+        _decode_live_lists(excluded, n_salts), _LISTS_SCHEMA
     )
     merged = merge_runs(
-        encode_runs(old_postings.unionByName(postings_in), avgdl, n_salts),
-        n_buckets,
+        encode_runs(postings_in, avgdl, n_salts, lists=old_lists), n_buckets
     )
     out = untouched.unionByName(merged)
     # term-sorted within each rewritten bucket file, same as the batch build:
@@ -184,8 +189,8 @@ def merge_docs_into_index(
 
     # Replay-idempotency ordering: doc_map is appended LAST of the data
     # writes — it is the replay gate (the anti-join above), so every earlier
-    # write must tolerate a re-run. Segments tolerate it via the anti-join of
-    # the old postings against the batch's doc_ids above; positions via the
+    # write must tolerate a re-run. Segments tolerate it by dropping the old
+    # postings of the batch's doc_ids above; positions via the
     # doc_id anti-join below. A crash anywhere before the doc_map append
     # simply re-runs the whole batch; after it, the batch is a no-op whose
     # repair pass fixes stats.
